@@ -64,7 +64,6 @@ SELFCHECK_TOOLS = [
     "plan_audit.py",
     "pipeline_probe.py",
     "scale_probe.py",
-    "fit_query_classes.py",
     "gen_scale_testdata.py",
     # r13 optimization-round measurement tools — same clean-shell
     # discipline so the r11/r12 boundary-defect class cannot recur
@@ -85,6 +84,45 @@ def test_selfcheck_from_clean_shell(tool, tmp_path):
         f"stdout:\n{r.stdout}\nstderr:\n{r.stderr}"
     )
     assert "selfcheck OK" in r.stdout, r.stdout
+
+
+def test_ab_bench_registers_only_open_experiments(tmp_path):
+    # Decided A/B experiments are deleted; only bloom2 is still open.
+    r = run_cli([os.path.join(TOOLS, "ab_bench.py"), "--selfcheck"],
+                tmp_path)
+    assert r.returncode == 0, f"stderr:\n{r.stderr}"
+    assert "selfcheck OK: 1 experiments registered" in r.stdout, r.stdout
+
+
+def test_merge_bench_sittings_copies_query_fields_atomically(tmp_path):
+    # The winning (fastest) sitting for q1 recorded no queries_samples
+    # for it; the losing, newest sitting did. No q1 field may come from
+    # the loser — the stale sample is dropped, not carried over.
+    import json
+    winner = {"queries": {"q1": 1.0, "q2": 5.0},
+              "queries_spread": {"q1": 0.1, "q2": 0.5},
+              "queries_local_cal": {"q1": 1.1, "q2": 1.2},
+              "queries_samples": {"q2": [5.0, 5.1]},
+              "query_class": {"q1": "cpu", "q2": "scan"}}
+    loser = {"queries": {"q1": 2.0, "q2": 4.0},
+             "queries_spread": {"q1": 0.9, "q2": 0.4},
+             "queries_local_cal": {"q1": 1.9, "q2": 1.3},
+             "queries_samples": {"q1": [2.0, 2.2], "q2": [4.0, 4.1]},
+             "query_class": {"q1": "shuffle", "q2": "cpu"}}
+    (tmp_path / "sitA.json").write_text(json.dumps(winner))
+    (tmp_path / "sitB.json").write_text(json.dumps(loser))
+    out = tmp_path / "merged.json"
+    r = run_cli([os.path.join(TOOLS, "merge_bench_sittings.py"), str(out),
+                 str(tmp_path / "sitA.json"), str(tmp_path / "sitB.json")],
+                tmp_path)
+    assert r.returncode == 0, f"stderr:\n{r.stderr}"
+    merged = json.loads(out.read_text())
+    assert merged["merged_from_sittings"] == {"q1": "sitA", "q2": "sitB"}
+    for key in ("queries", "queries_spread", "queries_local_cal",
+                "queries_samples", "query_class"):
+        assert merged[key].get("q1") == winner[key].get("q1"), key
+        assert merged[key].get("q2") == loser[key].get("q2"), key
+    assert "q1" not in merged["queries_samples"]
 
 
 def test_run_query_list_from_clean_shell(tmp_path):

@@ -1,12 +1,13 @@
-"""Interleaved A/B micro-bench for optimization candidates (r13).
+"""Interleaved A/B micro-bench for optimization candidates.
 
-Runs variant builders ALTERNATELY in one session (A, B, A, B, ...)
+Runs variant builders ALTERNATELY in one session (A, B, then B, A, ...)
 through the noop sink, so ambient load inflates both arms equally —
 the ROUND10 adjudication doctrine baked into the measurement itself.
 
-Usage: python tools/ab_bench.py <experiment> [reps]
-Experiments are registered in EXPERIMENTS below; each returns a dict
-of {variant_name: builder(spark, sf_dir) -> DataFrame}.
+Usage: python tools/ab_bench.py <experiment> [reps]   (reps default 6)
+Experiments are registered in tools/ab_experiments.py's EXPERIMENTS
+(today only ``bloom2``); each returns a dict of
+{variant_name: builder(spark, sf_dir) -> DataFrame}.
 """
 
 from __future__ import annotations
@@ -21,17 +22,17 @@ if ROOT not in sys.path:
     sys.path.insert(0, ROOT)
 
 
-def run_ab(spark, sf_dir: str, variants: dict, reps: int = 5,
+def run_ab(spark, sf_dir: str, variants: dict, reps: int = 6,
            warm: int = 2) -> None:
     """Counterbalanced interleaved A/B (r14): a null A/B (identical
     builders in both arms) exposed a large FIRST-POSITION penalty in
-    the r13 A,B,A,B pattern — the arm following a *different* heavy
+    a plain A,B,A,B pattern — the arm following a *different* heavy
     query read up to 36% slower than the same builder following
     itself (ngram null A/B: 4.63 vs 2.97 min-of-5). Alternating the
     visit order per rep (A,B then B,A) gives each arm the same
     position distribution, so the penalty cancels in both min and
     median instead of landing entirely on whichever arm was listed
-    first."""
+    first. The balance is exact only for an even ``reps``."""
     names = list(variants)
     for name in names:  # warm each: plan + JIT + page cache
         for _ in range(warm):
@@ -63,7 +64,7 @@ def main() -> None:
     from transcript_analysis_spark.session import get_spark
 
     exp = sys.argv[1]
-    reps = int(sys.argv[2]) if len(sys.argv) > 2 else 5
+    reps = int(sys.argv[2]) if len(sys.argv) > 2 else 6
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("ab-bench")
     spark.sparkContext.setLogLevel("ERROR")

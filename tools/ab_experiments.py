@@ -1,8 +1,9 @@
-"""Variant builders for tools/ab_bench.py (r13 optimization round).
+"""Variant builders for tools/ab_bench.py.
 
 Each experiment maps variant names to builder(spark, sf_dir) -> DataFrame.
-Variants that depend on a SQL conf set it at build time (confs are read
-at planning, so per-variant toggling inside one session is sound).
+Only experiments whose decision is still open are kept; decided ones
+(and their measurements) are recorded in OPTIMIZATION_r13.md,
+OPTIMIZATION_r14.md and SCALE.md and live on in git history.
 """
 
 from __future__ import annotations
@@ -21,665 +22,6 @@ from transcript_analysis_spark.plans import all_queries  # noqa: E402
 
 def _q(name):
     return all_queries()[name].fn
-
-
-def _with_conf(fn, **confs):
-    def build(spark, sf_dir):
-        for k, v in confs.items():
-            spark.conf.set(k, v)
-        try:
-            return fn(spark, sf_dir)
-        finally:
-            pass
-    return build
-
-
-def exp_shj(spark):
-    """preferSortMergeJoin=false on the SMJ-heavy headliners."""
-    out = {}
-    for q in ("pagerank_purchase_graph", "bloom_prefilter_contamination",
-              "corpus_release_prep"):
-        out[f"{q}:smj"] = _with_conf(
-            _q(q), **{"spark.sql.join.preferSortMergeJoin": "true"})
-        out[f"{q}:shj"] = _with_conf(
-            _q(q), **{"spark.sql.join.preferSortMergeJoin": "false"})
-    return out
-
-
-def exp_asof(spark):
-    """Re-measure asof (suspected weather in sitting 1)."""
-    return {"asof_purchase_context": _q("asof_purchase_context"),
-            "tumbling": _q("tumbling_hourly_event_stats")}
-
-
-def _bloom_union(spark, sf_dir):
-    """bloom_prefilter_contamination with counts+overlap computed in
-    ONE aggregate over a union (positives joined to train first),
-    dropping the final doc_id join."""
-    from transcript_analysis_spark.plans.data_pipeline import (
-        EVAL_SOURCES, _spark_shingles, _t, spark_char_hash)
-    from transcript_analysis_spark.plans.scale_ops import (
-        bloom_words, bloom_hit_column)
-
-    sh = _spark_shingles(spark, sf_dir)
-    src = _t(spark, sf_dir, "documents").select("doc_id", "source")
-    is_eval = F.col("source").isin(*EVAL_SOURCES)
-    train = (sh.join(src.filter(~is_eval), "doc_id")
-             .select("shingle").distinct().localCheckpoint(eager=True))
-    bwords = bloom_words(train)
-    bitmap = bwords.agg(F.map_from_entries(
-        F.collect_list(F.struct("w", "bits"))).alias("bm"))
-    ev = (sh.join(src.filter(is_eval), "doc_id")
-          .withColumn("h", F.expr(spark_char_hash("shingle"))))
-    probe = ev.join(F.broadcast(bitmap))
-    hit = bloom_hit_column("h", "bm")
-    probe = (probe.select("doc_id", "shingle", hit.alias("bloom_hit"))
-             .localCheckpoint(eager=True))
-    pos = (probe.filter("bloom_hit")
-           .join(train.withColumn("in_train", F.lit(1)), "shingle", "left")
-           .select("doc_id", F.lit(1).alias("is_cand"),
-                   F.coalesce("in_train", F.lit(0)).alias("in_train")))
-    neg = (probe.filter(~F.col("bloom_hit"))
-           .select("doc_id", F.lit(0).alias("is_cand"),
-                   F.lit(0).alias("in_train")))
-    u = pos.unionAll(neg)
-    return (u.groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("n_shingles"),
-                 F.sum("is_cand").cast("long").alias("n_candidates"),
-                 F.sum("in_train").cast("long").alias("n_overlap"))
-            .select("doc_id", "n_shingles", "n_candidates", "n_overlap",
-                    (F.col("n_candidates") - F.col("n_overlap"))
-                    .cast("long").alias("n_false_positives")))
-
-
-def exp_bloom(spark):
-    return {"bloom:current": _q("bloom_prefilter_contamination"),
-            "bloom:union1agg": _bloom_union}
-
-
-def _islands_hoisted(spark, sf_dir):
-    """islands_flagship with the per-word integer base hoisted above
-    the model cross join (string ops once per word, not once per
-    (word, model))."""
-    from transcript_analysis_spark.operators import islands as isl
-    from transcript_analysis_spark.plans.domain import (
-        fanout, load_table, segments_from)
-
-    docs = fanout(load_table(spark, sf_dir, "documents"))
-    models = spark.range(5).select(F.col("id").alias("model_id"))
-    base = ("transform(words, (w, i) -> ascii(substr(w, 1, 1)) * 31"
-            " + length(w) * 17 + (i + 1) * 7)")
-    scored0 = (
-        docs.select("doc_id", F.split("text", " ").alias("words"))
-        .withColumn("__base", F.expr(base))
-        .crossJoin(F.broadcast(models))
-        .withColumn("raw", F.expr(
-            "transform(__base, b -> CASE WHEN (b + model_id * 13) % 10 < 3"
-            " THEN CAST(0.9 AS DOUBLE) ELSE CAST(0.1 AS DOUBLE) END)"))
-        .drop("__base"))
-    scored = isl.smooth_scores(scored0, score_col="raw",
-                               out_col="smoothed")
-    found = isl.find_islands(scored, keys=["doc_id", "model_id"],
-                             score_col="raw", smoothed_col="smoothed")
-    ranged = isl.with_word_range(found)
-    segments = segments_from(docs)
-    timed = isl.with_time_range(ranged, segments, key="doc_id")
-    return timed.select(
-        "doc_id", "model_id", "start_index", "end_index",
-        "word_start", "word_end", "time_start_sec", "time_end_sec",
-        "average_score")
-
-
-def exp_islands(spark):
-    return {"islands:current": _q("islands_flagship"),
-            "islands:hoisted": _islands_hoisted}
-
-
-def _ngram_model_join(spark, sf_dir):
-    """ngram_model_score with per-entry precomputed logp model tables:
-    2 probe-side joins instead of 3, log10 evaluated per model row
-    instead of per pair row (the lm_perplexity_filter discipline)."""
-    from transcript_analysis_spark.functions.rounding import (
-        spark_round_ratio)
-    from transcript_analysis_spark.plans.domain import fanout, load_table
-
-    docs = fanout(load_table(spark, sf_dir, "documents"))
-    d = docs.select("doc_id", "source", F.split("text", " ").alias("words"))
-    bi = (
-        d.select(
-            "doc_id", "source",
-            F.posexplode(F.arrays_zip(
-                F.slice("words", 1, F.size("words") - 1),
-                F.slice("words", 2, F.size("words") - 1)))
-             .alias("pos0", "z"))
-        .select("doc_id", "source",
-                (F.col("pos0") + 1).alias("pos"),
-                F.col("z")["0"].alias("w1"),
-                F.col("z")["1"].alias("w2"))
-    )
-    tok = (d.select("doc_id", "source",
-                    F.posexplode("words").alias("pos0", "word"))
-           .select("doc_id", "source", "word"))
-    c2 = (bi.groupBy(F.col("source").alias("model_source"), "w1", "w2")
-            .agg(F.count(F.lit(1)).alias("cnt2")))
-    c1 = (c2.groupBy("model_source", "w1")
-            .agg(F.sum("cnt2").cast("long").alias("cnt1")))
-    cu = (tok.groupBy(F.col("source").alias("model_source"), "word")
-             .agg(F.count(F.lit(1)).alias("cntu")))
-    tot = (cu.groupBy("model_source")
-             .agg(F.sum("cntu").cast("long").alias("total")))
-    m2 = (c2.join(c1, ["model_source", "w1"])
-          .select("model_source", "w1", "w2",
-                  F.round(F.log10(F.col("cnt2").cast("double")
-                                  / F.col("cnt1")), 9).alias("logp2")))
-    bo = (cu.join(F.broadcast(tot), ["model_source"])
-          .select("model_source", F.col("word").alias("w2"),
-                  F.round(F.log10((F.lit(0.4) * F.col("cntu"))
-                                  / F.col("total")), 9).alias("logpu")))
-    models = tot.select("model_source")
-    pairs = bi.select("doc_id", "w1", "w2").crossJoin(F.broadcast(models))
-    scored = (
-        pairs
-        .join(m2, ["model_source", "w1", "w2"], "left")
-        .join(bo, ["model_source", "w2"], "left")
-        .select("doc_id", "model_source",
-                F.coalesce("logp2", "logpu", F.lit(-7.0)).alias("logp")))
-    return (scored.groupBy("doc_id", "model_source")
-            .agg(spark_round_ratio(
-                    "sum(cast(round(logp * 1e9, 0) as bigint))",
-                    "count(1)", 6, n_prescale=9).alias("avg_logprob"),
-                 F.count(F.lit(1)).alias("n_ngrams")))
-
-
-def exp_ngram(spark):
-    return {"ngram:current": _q("ngram_model_score"),
-            "ngram:modeljoin": _ngram_model_join}
-
-
-def exp_aqeshj(spark):
-    """AQE runtime SMJ->SHJ conversion threshold (0 = off, default)."""
-    out = {}
-    for q in ("pagerank_purchase_graph", "ngram_model_score",
-              "mllib_lsh_similar_pairs"):
-        out[f"{q}:thr0"] = _with_conf(
-            _q(q), **{"spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": "0"})
-        out[f"{q}:thr64m"] = _with_conf(
-            _q(q), **{"spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": "67108864"})
-    return out
-
-
-_SQL_FRONTEND = """
-    SELECT r.r_name,
-           COUNT(*)                                              AS n_items,
-           ROUND(SUM(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue
-    FROM lineitem l
-    JOIN orders o   ON l.l_orderkey = o.o_orderkey
-    JOIN customer c ON o.o_custkey = c.c_custkey
-    JOIN nation n   ON c.c_nationkey = n.n_nationkey
-    JOIN region r   ON n.n_regionkey = r.r_regionkey
-    GROUP BY r.r_name
-"""
-
-
-def _sqlfrontend_scoped(spark, sf_dir):
-    from transcript_analysis_spark.sources.tables import load_table
-    for name in ("lineitem", "orders", "customer", "nation", "region"):
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-    return spark.sql(_SQL_FRONTEND)
-
-
-def exp_sqlfrontend(spark):
-    return {"sqlf:all10views": _q("sql_frontend_revenue_by_region"),
-            "sqlf:5views": _sqlfrontend_scoped}
-
-
-EXPERIMENTS = {
-    "shj": exp_shj,
-    "asof": exp_asof,
-    "bloom": exp_bloom,
-    "islands": exp_islands,
-    "sqlfrontend": exp_sqlfrontend,
-    "ngram": exp_ngram,
-    "aqeshj": exp_aqeshj,
-}
-
-
-def _dsir_keyed(spark, sf_dir):
-    """dsir with fanout hash-partitioned by doc_id: the (doc_id,
-    source, w) groupBy reuses the partitioning (no second exchange)
-    and the round-robin local sort disappears."""
-    from transcript_analysis_spark.plans.selection import (
-        DSIR_TARGET, doc_word_counts, dsir_score, dsir_weight_table, _t)
-    docs = _t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism, F.col("doc_id"))
-    dc = doc_word_counts(docs).localCheckpoint(eager=True)
-    wt = dsir_weight_table(dc)
-    return dsir_score(dc.filter(F.col("source") != DSIR_TARGET), wt)
-
-
-def _islands_keyed(spark, sf_dir):
-    from transcript_analysis_spark.plans.domain import (
-        islands_from_docs, load_table)
-    docs = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism, F.col("doc_id"))
-    return islands_from_docs(docs)
-
-
-def exp_keyed(spark):
-    return {"dsir:roundrobin": _q("dsir_importance_weights"),
-            "dsir:keyed": _dsir_keyed,
-            "islands:roundrobin": _q("islands_flagship"),
-            "islands:keyed": _islands_keyed}
-
-
-EXPERIMENTS["keyed"] = exp_keyed
-
-
-def _sweep_keyed(spark, sf_dir):
-    from transcript_analysis_spark.operators import islands as isl
-    from transcript_analysis_spark.plans.domain import (
-        ISLAND_SWEEP_CONFIGS, load_table, scored_documents_from,
-        sweep_table_from_islands)
-    docs = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism, F.col("doc_id"))
-    scored = isl.smooth_scores(scored_documents_from(docs),
-                               score_col="raw", out_col="smoothed") \
-        .localCheckpoint(eager=True)
-    im = isl.find_islands_multi(scored, keys=["doc_id", "model_id"],
-                                score_col="raw", smoothed_col="smoothed",
-                                configs=ISLAND_SWEEP_CONFIGS)
-    return sweep_table_from_islands(spark, im)
-
-
-def exp_keyed2(spark):
-    return {"islands:roundrobin": _q("islands_flagship"),
-            "islands:keyed": _islands_keyed,
-            "sweep:current": _q("island_param_sensitivity"),
-            "sweep:keyed": _sweep_keyed}
-
-
-EXPERIMENTS["keyed2"] = exp_keyed2
-
-
-def exp_regress(spark):
-    """Did the r13 conf defaults hurt mllib/lm_perplexity? Compare the
-    r12 conf set (preferSMJ=true, thr=0) against the r13 defaults."""
-    r12 = {"spark.sql.join.preferSortMergeJoin": "true",
-           "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": "0"}
-    r13 = {"spark.sql.join.preferSortMergeJoin": "false",
-           "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": "67108864"}
-    out = {}
-    for q in ("mllib_lsh_similar_pairs", "lm_perplexity_filter"):
-        out[f"{q}:r12conf"] = _with_conf(_q(q), **r12)
-        out[f"{q}:r13conf"] = _with_conf(_q(q), **r13)
-    return out
-
-
-EXPERIMENTS["regress"] = exp_regress
-
-
-def _sweep_slim(spark, sf_dir):
-    """island_param_sensitivity with the checkpoint projected to the
-    4 columns find_islands_multi reads (drops the 5x-replicated words
-    array from the materialization)."""
-    from transcript_analysis_spark.operators import islands as isl
-    from transcript_analysis_spark.plans.domain import (
-        ISLAND_SWEEP_CONFIGS, _scored_documents, sweep_table_from_islands)
-    scored = (isl.smooth_scores(_scored_documents(spark, sf_dir),
-                                score_col="raw", out_col="smoothed")
-              .select("doc_id", "model_id", "raw", "smoothed")
-              .localCheckpoint(eager=True))
-    im = isl.find_islands_multi(scored, keys=["doc_id", "model_id"],
-                                configs=ISLAND_SWEEP_CONFIGS,
-                                score_col="raw", smoothed_col="smoothed")
-    return sweep_table_from_islands(spark, im)
-
-
-def exp_sweepslim(spark):
-    return {"sweep:current": _q("island_param_sensitivity"),
-            "sweep:slim": _sweep_slim}
-
-
-EXPERIMENTS["sweepslim"] = exp_sweepslim
-
-
-def exp_tdp(spark):
-    """r14 VERDICT item 1: adjudicate the training_data_prep 32-core
-    regression by isolating the two r13 conf changes. Four arms:
-    the r12 conf set, each conf alone, and the r13 default set."""
-    arms = {
-        "tdp:r12conf": {"spark.sql.join.preferSortMergeJoin": "true",
-                        "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": "0"},
-        "tdp:smjFalseOnly": {"spark.sql.join.preferSortMergeJoin": "false",
-                             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": "0"},
-        "tdp:aqeThrOnly": {"spark.sql.join.preferSortMergeJoin": "true",
-                           "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": "67108864"},
-        "tdp:r13conf": {"spark.sql.join.preferSortMergeJoin": "false",
-                        "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": "67108864"},
-    }
-    return {name: _with_conf(_q("training_data_prep"), **confs)
-            for name, confs in arms.items()}
-
-
-EXPERIMENTS["tdp"] = exp_tdp
-
-
-def _ngram_preagg(spark, sf_dir):
-    """ngram_model_score probing at distinct-(doc, w1, w2) granularity
-    (r14 VERDICT item 4): bigram occurrences collapse to counts BEFORE
-    the model probes, so each distinct (doc, bigram) pays the 3 probe
-    joins once and the final rollup weights by cnt. Exact equivalence:
-    sum over occurrences of round(logp*1e9) == sum over distinct
-    triples of cnt * round(logp*1e9); n_ngrams == sum(cnt)."""
-    from transcript_analysis_spark.functions.rounding import (
-        spark_round_ratio)
-    from transcript_analysis_spark.plans.domain import fanout, load_table
-
-    docs = fanout(load_table(spark, sf_dir, "documents"))
-    d = docs.select("doc_id", "source", F.split("text", " ").alias("words"))
-    bi = (
-        d.select(
-            "doc_id", "source",
-            F.posexplode(F.arrays_zip(
-                F.slice("words", 1, F.size("words") - 1),
-                F.slice("words", 2, F.size("words") - 1)))
-             .alias("pos0", "z"))
-        .select("doc_id", "source",
-                F.col("z")["0"].alias("w1"),
-                F.col("z")["1"].alias("w2"))
-    )
-    tok = (d.select("doc_id", "source",
-                    F.posexplode("words").alias("pos0", "word"))
-           .select("doc_id", "source", "word"))
-    c2 = (bi.groupBy(F.col("source").alias("model_source"), "w1", "w2")
-            .agg(F.count(F.lit(1)).alias("cnt2")))
-    c1 = (c2.groupBy("model_source", "w1")
-            .agg(F.sum("cnt2").cast("long").alias("cnt1")))
-    cu = (tok.groupBy(F.col("source").alias("model_source"), "word")
-             .agg(F.count(F.lit(1)).alias("cntu")))
-    tot = (cu.groupBy("model_source")
-             .agg(F.sum("cntu").cast("long").alias("total")))
-    models = tot.select("model_source")
-    bic = (bi.groupBy("doc_id", "w1", "w2")
-             .agg(F.count(F.lit(1)).alias("cnt")))
-    pairs = bic.crossJoin(F.broadcast(models))
-    scored = (
-        pairs
-        .join(c2, ["model_source", "w1", "w2"], "left")
-        .join(c1, ["model_source", "w1"], "left")
-        .join(cu.withColumnRenamed("word", "w2"), ["model_source", "w2"], "left")
-        .join(F.broadcast(tot), ["model_source"])
-        .select(
-            "doc_id", "model_source", "cnt",
-            F.when(F.col("cnt2").isNotNull(),
-                   F.round(F.log10(F.col("cnt2").cast("double") / F.col("cnt1")), 9))
-             .when(F.col("cntu").isNotNull(),
-                   F.round(F.log10((F.lit(0.4) * F.col("cntu")) / F.col("total")), 9))
-             .otherwise(F.lit(-7.0))
-             .alias("logp"))
-    )
-    return (scored.groupBy("doc_id", "model_source")
-            .agg(spark_round_ratio(
-                    "sum(cnt * cast(round(logp * 1e9, 0) as bigint))",
-                    "sum(cnt)", 6, n_prescale=9).alias("avg_logprob"),
-                 F.sum("cnt").cast("long").alias("n_ngrams")))
-
-
-def exp_ngram2(spark):
-    return {"ngram:current": _q("ngram_model_score"),
-            "ngram:preagg": _ngram_preagg}
-
-
-EXPERIMENTS["ngram2"] = exp_ngram2
-
-
-def _pagerank_iter_ckpt(spark, sf_dir):
-    """pagerank with a lazy localCheckpoint of the rank frame between
-    iterations (r14 VERDICT item 8): truncates the T-round plan so each
-    round is its own AQE-planned job with runtime stats."""
-    from transcript_analysis_spark.plans.graph import (
-        PR_D_DEN, PR_D_NUM, PR_MASS, PR_T, _spark_graph)
-
-    edges, deg = _spark_graph(spark, sf_dir, materialize_base=True)
-    nn = deg.agg(F.count("*").alias("n"))
-    base_pr = F.expr(f"{PR_MASS} div n")
-    r = (deg.join(F.broadcast(nn))
-         .select(F.col("src").alias("node"),
-                 base_pr.cast("bigint").alias("pr")))
-    ed = edges.join(deg, "src")
-    for _ in range(PR_T):
-        inflow = (ed.join(r, ed.src == r.node)
-                  .select("dst", F.expr("pr div deg").alias("c"))
-                  .groupBy("dst").agg(F.sum("c").alias("inflow")))
-        r = (deg.join(F.broadcast(nn))
-             .join(inflow, deg.src == inflow.dst, "left")
-             .select(
-                 F.col("src").alias("node"),
-                 (F.expr(f"({PR_D_DEN - PR_D_NUM} * ({PR_MASS} div n))"
-                         f" div {PR_D_DEN}")
-                  + F.expr(f"({PR_D_NUM} * coalesce(inflow, 0))"
-                           f" div {PR_D_DEN}")).cast("bigint").alias("pr")))
-        r = r.localCheckpoint(eager=False)
-    return r.select(F.col("node").alias("node_id"),
-                    F.col("pr").alias("pagerank_fp"))
-
-
-def exp_pagerank2(spark):
-    return {"pr:current": _q("pagerank_purchase_graph"),
-            "pr:iterckpt": _pagerank_iter_ckpt}
-
-
-EXPERIMENTS["pagerank2"] = exp_pagerank2
-
-
-def _crp_fused(spark, sf_dir):
-    """corpus_release_prep with the two corpus explodes fused (r14
-    VERDICT item 6): ONE explode emits both the bigram keys (kind=2,
-    for the perplexity model) and the 3-gram shingles (kind=3, for
-    dup coverage); ONE groupBy collapses both to per-(doc, key) counts
-    and ONE localCheckpoint pins the union. kind=2 rows reproduce
-    lm_perplexity_filter's pos_counts exactly; kind=3 rows reproduce
-    duplicate_ngram_coverage's occ_counts exactly."""
-    from transcript_analysis_spark.functions.rounding import (
-        spark_round_ratio)
-    from transcript_analysis_spark.plans.curation import (
-        COV_DROP_THRESHOLD, NLL_FLAG_THRESHOLD, dataset_split_assignment)
-    from transcript_analysis_spark.plans.data_pipeline import _t
-    from transcript_analysis_spark.plans.domain import fanout
-
-    docs_w = (fanout(_t(spark, sf_dir, "documents"))
-              .select("doc_id", F.split("text", " ").alias("words")))
-    grams = docs_w.select("doc_id", F.explode(F.expr(
-        "concat("
-        " CASE WHEN size(words) >= 2 THEN"
-        "  transform(sequence(1, size(words) - 1),"
-        "   i -> struct(2 as kind, element_at(words, i) as k1,"
-        "               element_at(words, i + 1) as k2))"
-        "  ELSE array() END,"
-        " CASE WHEN size(words) >= 3 THEN"
-        "  transform(sequence(1, size(words) - 2),"
-        "   i -> struct(3 as kind, concat_ws(' ', slice(words, i, 3)) as k1,"
-        "               '' as k2))"
-        "  ELSE array() END)")).alias("g"))
-    counts = (grams.select("doc_id", "g.kind", "g.k1", "g.k2")
-              .groupBy("doc_id", "kind", "k1", "k2")
-              .agg(F.count(F.lit(1)).alias("cnt"))
-              .localCheckpoint(eager=True))
-    pos_counts = (counts.filter(F.col("kind") == 2)
-                  .select("doc_id", F.col("k1").alias("w1"),
-                          F.col("k2").alias("w2"), "cnt"))
-    occ_counts = (counts.filter(F.col("kind") == 3)
-                  .select("doc_id", F.col("k1").alias("shingle"),
-                          F.col("cnt").alias("n_occ")))
-
-    # --- lm_perplexity_filter tail (verbatim from curation.py) ---
-    big = pos_counts.groupBy("w1", "w2").agg(F.sum("cnt").alias("c2"))
-    uni = big.groupBy("w1").agg(F.sum("c2").alias("c1"))
-    vocab = (big.select(F.col("w1").alias("w"))
-             .union(big.select(F.col("w2").alias("w")))
-             .distinct()
-             .agg(F.count(F.lit(1)).alias("v")))
-    model = (big.join(uni, "w1").join(F.broadcast(vocab))
-             .select("w1", "w2", F.expr(
-                 "cast(round(ln((2.0 * c2 + 1.0) / (2.0 * c1 + v))"
-                 " * 1000000000.0) as bigint)").alias("logp_e9")))
-    lm_scored = (pos_counts.join(F.broadcast(model), ["w1", "w2"])
-                 .groupBy("doc_id")
-                 .agg(F.sum("cnt").cast("long").alias("n_bigrams"),
-                      (-F.sum(F.col("cnt") * F.col("logp_e9")))
-                      .cast("long").alias("nll_e9")))
-    avg_nll = spark_round_ratio("nll_e9", "n_bigrams", 4, n_prescale=9)
-    ppl = lm_scored.select(
-        "doc_id", (avg_nll > NLL_FLAG_THRESHOLD).alias("flagged"))
-
-    # --- duplicate_ngram_coverage tail (verbatim) ---
-    dup = (occ_counts
-           .groupBy("shingle")
-           .agg(F.count(F.lit(1)).alias("n_docs"))
-           .filter(F.col("n_docs") >= 2)
-           .select("shingle", F.lit(1).alias("is_dup")))
-    marked = occ_counts.join(dup, "shingle", "left")
-    cov = (marked.groupBy("doc_id")
-           .agg(F.sum("n_occ").cast("long").alias("n_positions"),
-                F.sum(F.when(F.col("is_dup").isNotNull(), F.col("n_occ"))
-                       .otherwise(F.lit(0))).cast("long")
-                 .alias("n_dup_positions"))
-           .withColumn("dup_fraction",
-                       spark_round_ratio("n_dup_positions",
-                                         "n_positions", 6))
-           .select("doc_id", "dup_fraction"))
-
-    # --- release decision (verbatim) ---
-    spl = dataset_split_assignment(spark, sf_dir)
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    minid = docs.groupBy("text").agg(F.min("doc_id").alias("canonical_id"))
-    dupflag = (docs.join(minid, "text")
-               .select("doc_id",
-                       (F.col("doc_id") != F.col("canonical_id"))
-                       .alias("is_copy")))
-    j = (spl.join(dupflag, "doc_id")
-         .join(cov, "doc_id", "left")
-         .join(ppl, "doc_id", "left"))
-    reason = (F.when(F.col("is_copy"), F.lit("duplicate"))
-              .when(F.col("dup_fraction") > COV_DROP_THRESHOLD,
-                    F.lit("dup_coverage"))
-              .when(F.col("flagged"), F.lit("perplexity"))
-              .otherwise(F.lit("none")))
-    return j.select("doc_id", "lang", "split",
-                    reason.alias("drop_reason"),
-                    (reason == "none").alias("keep"))
-
-
-def exp_crp(spark):
-    return {"crp:current": _q("corpus_release_prep"),
-            "crp:fused": _crp_fused}
-
-
-EXPERIMENTS["crp"] = exp_crp
-
-
-def exp_confpair(spark):
-    """r14: is the r13 conf pair (preferSMJ=false + AQE SHJ threshold)
-    worth anything at all? Final-plan dumps show ZERO ShuffledHashJoin
-    under these confs, so the expectation is neutral."""
-    r12 = {"spark.sql.join.preferSortMergeJoin": "true",
-           "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": "0"}
-    r13 = {"spark.sql.join.preferSortMergeJoin": "false",
-           "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": "67108864"}
-    out = {}
-    for q in ("pagerank_purchase_graph", "bloom_prefilter_contamination",
-              "corpus_release_prep", "ngram_model_score"):
-        out[f"{q}:r12conf"] = _with_conf(_q(q), **r12)
-        out[f"{q}:r13conf"] = _with_conf(_q(q), **r13)
-    return out
-
-
-EXPERIMENTS["confpair"] = exp_confpair
-
-
-def exp_nullab(spark):
-    """Null A/B: all arms run the SAME builder under the SAME confs.
-    Any systematic spread between arms is harness/position artifact."""
-    r13 = {"spark.sql.join.preferSortMergeJoin": "false",
-           "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": "67108864"}
-    out = {}
-    for q in ("ngram_model_score", "bloom_prefilter_contamination"):
-        out[f"{q}:armA"] = _with_conf(_q(q), **r13)
-        out[f"{q}:armB"] = _with_conf(_q(q), **r13)
-    return out
-
-
-EXPERIMENTS["nullab"] = exp_nullab
-
-
-def _islands_roundrobin(spark, sf_dir):
-    """islands_flagship with the pre-r13 round-robin fanout (the
-    registered query is keyed now) — for re-verifying the r13 adoption
-    under the counterbalanced harness."""
-    from transcript_analysis_spark.plans.domain import (
-        islands_from_docs, load_table)
-    from transcript_analysis_spark.sources.tables import fanout
-    return islands_from_docs(fanout(load_table(spark, sf_dir,
-                                                "documents")))
-
-
-def exp_islands3(spark):
-    return {"islands:keyed(current)": _q("islands_flagship"),
-            "islands:roundrobin(r12)": _islands_roundrobin}
-
-
-EXPERIMENTS["islands3"] = exp_islands3
-
-
-def _mllib_lsh_idjoin(spark, sf_dir):
-    """mllib_lsh_similar_pairs with the candidate search done on ids
-    only (guide §8): same fitted MLlib model, same hashes, but the
-    bucket join ships (vec_id, entry, bucket) instead of MLlib's
-    (full row + vector + hashes), the distinct runs on id pairs, and
-    the euclidean distance is a codegen expression over vectors
-    re-attached by id — replacing approxSimilarityJoin's wide-row
-    distinct + scalar-UDF distance. Pair set and distances must be
-    IDENTICAL (same hashes, same candidate condition, same
-    ascending-order float summation)."""
-    from pyspark.ml.functions import vector_to_array
-    from transcript_analysis_spark.operators.ann import fit_lsh_model
-    from transcript_analysis_spark.plans.data_pipeline import _t
-
-    e = _t(spark, sf_dir, "embeddings")
-    model, df = fit_lsh_model(e, "embedding",
-                              bucket_length=0.25, num_tables=2)
-    hashed = model.transform(df)
-    ent = (hashed.select("vec_id",
-                         F.posexplode("__hashes").alias("entry", "hv"))
-           .select("vec_id", "entry",
-                   vector_to_array("hv").getItem(0).alias("bucket")))
-    a = ent.select(F.col("vec_id").alias("vec_a"), "entry", "bucket")
-    b = ent.select(F.col("vec_id").alias("vec_b"), "entry", "bucket")
-    cand = (a.join(b, ["entry", "bucket"])
-            .filter(F.col("vec_a") < F.col("vec_b"))
-            .select("vec_a", "vec_b").distinct())
-    vecs = df.select("vec_id", F.expr(
-        "transform(embedding, x -> cast(x as double))").alias("v"))
-    dist = ("sqrt(aggregate(zip_with(va, vb, (x, y) -> (x - y) * (x - y)),"
-            " 0D, (acc, d) -> acc + d))")
-    pairs = (cand
-             .join(vecs.select(F.col("vec_id").alias("vec_a"),
-                               F.col("v").alias("va")), "vec_a")
-             .join(vecs.select(F.col("vec_id").alias("vec_b"),
-                               F.col("v").alias("vb")), "vec_b")
-             .select("vec_a", "vec_b", F.expr(dist).alias("dist"))
-             .filter(F.col("dist") < F.lit(1.2))
-             .select("vec_a", "vec_b",
-                     F.round("dist", 6).alias("euclidean_dist")))
-    return pairs.orderBy("vec_a", "vec_b")
-
-
-def exp_mllib2(spark):
-    return {"mllib:current": _q("mllib_lsh_similar_pairs"),
-            "mllib:idjoin": _mllib_lsh_idjoin}
-
-
-EXPERIMENTS["mllib2"] = exp_mllib2
 
 
 def _bloom_fused(spark, sf_dir):
@@ -735,4 +77,4 @@ def exp_bloom2(spark):
             "bloom:fusedocc": _bloom_fused}
 
 
-EXPERIMENTS["bloom2"] = exp_bloom2
+EXPERIMENTS = {"bloom2": exp_bloom2}

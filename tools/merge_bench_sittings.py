@@ -48,9 +48,15 @@ def main() -> None:
         best_label, best_rec = min(
             candidates, key=lambda lr: lr[1]["queries"][q])
         merged_from[q] = best_label
+        # All of a query's fields come from its winning sitting: a field
+        # the winner lacks is dropped, never left at the newest
+        # sitting's value.
         for key in PER_QUERY:
-            if best_rec.get(key, {}).get(q) is not None:
-                base[key][q] = best_rec[key][q]
+            val = (best_rec.get(key) or {}).get(q)
+            if val is None:
+                base[key].pop(q, None)
+            else:
+                base[key][q] = val
     base["value"] = round(sum(base["queries"].values()), 3)
     base["merged_from_sittings"] = merged_from
     with open(out_path, "w") as fh:

@@ -153,6 +153,26 @@ def pii_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- duplicate n-gram coverage -------------------------------------------
 
+def _dup_coverage(occ_counts: DataFrame) -> DataFrame:
+    """duplicate_ngram_coverage's tail over per-(doc_id, shingle)
+    occurrence counts ``n_occ``: (doc_id, n_positions,
+    n_dup_positions, dup_fraction). Shared with corpus_release_prep."""
+    dup = (occ_counts
+           .groupBy("shingle")
+           .agg(F.count(F.lit(1)).alias("n_docs"))
+           .filter(F.col("n_docs") >= 2)
+           .select("shingle", F.lit(1).alias("is_dup")))
+    marked = occ_counts.join(dup, "shingle", "left")
+    return (marked.groupBy("doc_id")
+            .agg(F.sum("n_occ").cast("long").alias("n_positions"),
+                 F.sum(F.when(F.col("is_dup").isNotNull(), F.col("n_occ"))
+                        .otherwise(F.lit(0))).cast("long")
+                  .alias("n_dup_positions"))
+            .withColumn("dup_fraction",
+                        spark_round_ratio("n_dup_positions",
+                                          "n_positions", 6)))
+
+
 @register(
     "duplicate_ngram_coverage",
     oracle=f"""
@@ -212,20 +232,7 @@ def duplicate_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id", "shingle")
         .agg(F.count(F.lit(1)).alias("n_occ"))
         .localCheckpoint(eager=True))
-    dup = (occ_counts
-           .groupBy("shingle")
-           .agg(F.count(F.lit(1)).alias("n_docs"))
-           .filter(F.col("n_docs") >= 2)
-           .select("shingle", F.lit(1).alias("is_dup")))
-    marked = occ_counts.join(dup, "shingle", "left")
-    return (marked.groupBy("doc_id")
-            .agg(F.sum("n_occ").cast("long").alias("n_positions"),
-                 F.sum(F.when(F.col("is_dup").isNotNull(), F.col("n_occ"))
-                        .otherwise(F.lit(0))).cast("long")
-                  .alias("n_dup_positions"))
-            .withColumn("dup_fraction",
-                        spark_round_ratio("n_dup_positions",
-                                          "n_positions", 6)))
+    return _dup_coverage(occ_counts)
 
 
 # --- hybrid rank fusion ---------------------------------------------------
@@ -716,6 +723,41 @@ LM_ALPHA_NUM = 1        # add-alpha smoothing a = 1/2: P = (2*c2+1)/(2*c1+V)
 NLL_FLAG_THRESHOLD = 3.45   # flag docs with avg bigram NLL above this
 
 
+def _bigram_positions(docs_w: DataFrame) -> DataFrame:
+    """One (doc_id, w1, w2) row per adjacent word pair of a
+    (doc_id, words) frame — the bigram explode of both LM queries."""
+    return (docs_w.select("doc_id", F.explode(F.expr(
+        "CASE WHEN size(words) >= 2 THEN"
+        " transform(sequence(1, size(words) - 1),"
+        " i -> struct(element_at(words, i) as w1,"
+        "             element_at(words, i + 1) as w2))"
+        " ELSE array() END")).alias("bg"))
+        .select("doc_id", F.col("bg.w1").alias("w1"),
+                F.col("bg.w2").alias("w2")))
+
+
+def _lm_scored(pos_counts: DataFrame) -> DataFrame:
+    """lm_perplexity_filter's tail over per-(doc_id, w1, w2) bigram
+    counts ``cnt``: fit the smoothed bigram model on the counts and
+    score them, giving (doc_id, n_bigrams, nll_e9). Shared with
+    corpus_release_prep."""
+    big = pos_counts.groupBy("w1", "w2").agg(F.sum("cnt").alias("c2"))
+    uni = big.groupBy("w1").agg(F.sum("c2").alias("c1"))
+    vocab = (big.select(F.col("w1").alias("w"))
+             .union(big.select(F.col("w2").alias("w")))
+             .distinct()
+             .agg(F.count(F.lit(1)).alias("v")))
+    model = (big.join(uni, "w1").join(F.broadcast(vocab))
+             .select("w1", "w2", F.expr(
+                 "cast(round(ln((2.0 * c2 + 1.0) / (2.0 * c1 + v))"
+                 " * 1000000000.0) as bigint)").alias("logp_e9")))
+    return (pos_counts.join(F.broadcast(model), ["w1", "w2"])
+            .groupBy("doc_id")
+            .agg(F.sum("cnt").cast("long").alias("n_bigrams"),
+                 (-F.sum(F.col("cnt") * F.col("logp_e9"))).cast("long")
+                  .alias("nll_e9")))
+
+
 @register(
     "lm_perplexity_filter",
     oracle=f"""
@@ -791,32 +833,11 @@ def lm_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-keyed shuffle is the final doc_id rollup."""
     docs = (fanout(_t(spark, sf_dir, "documents"))
             .select("doc_id", F.split("text", " ").alias("words")))
-    pos_counts = (docs.select("doc_id", F.explode(F.expr(
-        "CASE WHEN size(words) >= 2 THEN"
-        " transform(sequence(1, size(words) - 1),"
-        " i -> struct(element_at(words, i) as w1,"
-        "             element_at(words, i + 1) as w2))"
-        " ELSE array() END")).alias("bg"))
-        .select("doc_id", F.col("bg.w1").alias("w1"),
-                F.col("bg.w2").alias("w2"))
-        .groupBy("doc_id", "w1", "w2")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=True))
-    big = pos_counts.groupBy("w1", "w2").agg(F.sum("cnt").alias("c2"))
-    uni = big.groupBy("w1").agg(F.sum("c2").alias("c1"))
-    vocab = (big.select(F.col("w1").alias("w"))
-             .union(big.select(F.col("w2").alias("w")))
-             .distinct()
-             .agg(F.count(F.lit(1)).alias("v")))
-    model = (big.join(uni, "w1").join(F.broadcast(vocab))
-             .select("w1", "w2", F.expr(
-                 "cast(round(ln((2.0 * c2 + 1.0) / (2.0 * c1 + v))"
-                 " * 1000000000.0) as bigint)").alias("logp_e9")))
-    scored = (pos_counts.join(F.broadcast(model), ["w1", "w2"])
-              .groupBy("doc_id")
-              .agg(F.sum("cnt").cast("long").alias("n_bigrams"),
-                   (-F.sum(F.col("cnt") * F.col("logp_e9"))).cast("long")
-                    .alias("nll_e9")))
+    pos_counts = (_bigram_positions(docs)
+                  .groupBy("doc_id", "w1", "w2")
+                  .agg(F.count(F.lit(1)).alias("cnt"))
+                  .localCheckpoint(eager=True))
+    scored = _lm_scored(pos_counts)
     avg_nll = spark_round_ratio("nll_e9", "n_bigrams", 4, n_prescale=9)
     return scored.select(
         "doc_id", "n_bigrams",
@@ -935,15 +956,8 @@ def _register_backoff_eval() -> None:
 
         def bigram_counts(df, with_doc: bool):
             keys = (["doc_id", "w1", "w2"] if with_doc else ["w1", "w2"])
-            pos = words_of(df).select("doc_id", F.explode(F.expr(
-                "CASE WHEN size(words) >= 2 THEN"
-                " transform(sequence(1, size(words) - 1),"
-                " i -> struct(element_at(words, i) as w1,"
-                "             element_at(words, i + 1) as w2))"
-                " ELSE array() END")).alias("bg")
-            ).select("doc_id", F.col("bg.w1").alias("w1"),
-                     F.col("bg.w2").alias("w2"))
-            return pos.groupBy(*keys).agg(F.count(F.lit(1)).alias("cnt"))
+            return (_bigram_positions(words_of(df))
+                    .groupBy(*keys).agg(F.count(F.lit(1)).alias("cnt")))
 
         train = docs.filter(~is_eval)
         # model tables PINNED: tstats is referenced by bimodel,
@@ -1054,23 +1068,22 @@ def _register_release_prep() -> None:
         split. Decision precedence is part of the contract (a copy is
         'duplicate' even if it would also fail coverage).
 
-        r14 (guide §2.4, VERDICT r13 item 6): the two corpus explodes
-        the composed stages paid separately (bigrams for the
-        perplexity model, 3-gram shingles for dup coverage) are FUSED
-        into one explode emitting both widths with a `kind` tag, one
-        groupBy collapsing both to per-(doc, key) counts, and one
-        localCheckpoint of the union — halving the corpus scan+split+
-        explode work and one of the two checkpoint writes. kind=2 rows
-        reproduce lm_perplexity_filter's pos_counts EXACTLY and kind=3
-        rows duplicate_ngram_coverage's occ_counts EXACTLY (a bigram/
-        shingle's per-doc count is independent of what else the
-        explode emits), so every downstream stage is the registered
-        query's own tail, verbatim. Equivalence pinned three ways:
-        row-identical vs the composed form at sf0.001/0.01/0.1/1.0,
-        the unchanged composed DuckDB oracle, and
-        tests/test_curation.py's fused-vs-composed test. Measured:
-        −17% med at sf0.1, −9% med at sf1.0 (counterbalanced
-        interleaved A/B, twice at sf0.1).
+        The two corpus explodes the composed stages would pay
+        separately (bigrams for the perplexity model, 3-gram shingles
+        for dup coverage) are FUSED into one explode emitting both
+        widths with a `kind` tag, one groupBy collapsing both to
+        per-(doc, key) counts, and one localCheckpoint of the union —
+        halving the corpus scan+split+explode work and one of the two
+        checkpoint writes. kind=2 rows reproduce lm_perplexity_filter's
+        pos_counts EXACTLY and kind=3 rows duplicate_ngram_coverage's
+        occ_counts EXACTLY (a bigram/shingle's per-doc count is
+        independent of what else the explode emits). Everything above
+        the counts CALLS the standalone queries' own tails
+        (`_lm_scored`, `_dup_coverage`), so the fused form cannot
+        drift from its stages by construction; the composed DuckDB
+        oracle and tests/test_curation.py's fused-vs-composed test
+        check the explode half. Measured: −17% med at sf0.1, −9% med
+        at sf1.0 (counterbalanced interleaved A/B, twice at sf0.1).
 
         Missing stage rows (docs too short for shingles/bigrams) fail
         no gate — NULL comparisons are non-drops in both engines."""
@@ -1099,43 +1112,11 @@ def _register_release_prep() -> None:
                       .select("doc_id", F.col("k1").alias("shingle"),
                               F.col("cnt").alias("n_occ")))
 
-        # lm_perplexity_filter's tail over the kind=2 counts, verbatim
-        big = pos_counts.groupBy("w1", "w2").agg(F.sum("cnt").alias("c2"))
-        uni = big.groupBy("w1").agg(F.sum("c2").alias("c1"))
-        vocab = (big.select(F.col("w1").alias("w"))
-                 .union(big.select(F.col("w2").alias("w")))
-                 .distinct()
-                 .agg(F.count(F.lit(1)).alias("v")))
-        model = (big.join(uni, "w1").join(F.broadcast(vocab))
-                 .select("w1", "w2", F.expr(
-                     "cast(round(ln((2.0 * c2 + 1.0) / (2.0 * c1 + v))"
-                     " * 1000000000.0) as bigint)").alias("logp_e9")))
-        lm_scored = (pos_counts.join(F.broadcast(model), ["w1", "w2"])
-                     .groupBy("doc_id")
-                     .agg(F.sum("cnt").cast("long").alias("n_bigrams"),
-                          (-F.sum(F.col("cnt") * F.col("logp_e9")))
-                          .cast("long").alias("nll_e9")))
+        lm_scored = _lm_scored(pos_counts)
         avg_nll = spark_round_ratio("nll_e9", "n_bigrams", 4, n_prescale=9)
         ppl = lm_scored.select(
             "doc_id", (avg_nll > NLL_FLAG_THRESHOLD).alias("flagged"))
-
-        # duplicate_ngram_coverage's tail over the kind=3 counts, verbatim
-        dup = (occ_counts
-               .groupBy("shingle")
-               .agg(F.count(F.lit(1)).alias("n_docs"))
-               .filter(F.col("n_docs") >= 2)
-               .select("shingle", F.lit(1).alias("is_dup")))
-        marked = occ_counts.join(dup, "shingle", "left")
-        cov = (marked.groupBy("doc_id")
-               .agg(F.sum("n_occ").cast("long").alias("n_positions"),
-                    F.sum(F.when(F.col("is_dup").isNotNull(),
-                                 F.col("n_occ"))
-                           .otherwise(F.lit(0))).cast("long")
-                     .alias("n_dup_positions"))
-               .withColumn("dup_fraction",
-                           spark_round_ratio("n_dup_positions",
-                                             "n_positions", 6))
-               .select("doc_id", "dup_fraction"))
+        cov = _dup_coverage(occ_counts).select("doc_id", "dup_fraction")
 
         spl = dataset_split_assignment(spark, sf_dir)
         docs = _t(spark, sf_dir, "documents").select("doc_id", "text")

@@ -67,7 +67,7 @@ from transcript_analysis_spark.functions.rounding import (
     duck_round_ratio,
     spark_round_ratio,
 )
-from transcript_analysis_spark.plans.data_pipeline import _t
+from transcript_analysis_spark.plans.data_pipeline import _t, shingles_of
 from transcript_analysis_spark.plans.registry import register
 from transcript_analysis_spark.sources.tables import fanout
 
@@ -569,14 +569,7 @@ def ngram_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     production); ratios use half-up integer rounding so the flag is
     deterministic."""
     d = _t(spark, sf_dir, "documents")
-    sh = (d.select("doc_id", F.split("text", " ").alias("words"))
-          .select("doc_id", F.explode(F.expr(
-              "CASE WHEN size(words) >= 3 THEN"
-              " transform(sequence(1, size(words) - 2),"
-              " i -> concat_ws(' ', element_at(words, i),"
-              " element_at(words, i + 1), element_at(words, i + 2)))"
-              " ELSE array() END")).alias("shingle"))
-          .distinct())
+    sh = shingles_of(d)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).cast("long").alias("n"))
     a = d.select(F.col("doc_id").alias("doc_a"), F.col("source").alias("src_a"))
     b = d.select(F.col("doc_id").alias("doc_b"), F.col("source").alias("src_b"))
@@ -984,14 +977,7 @@ def minhash_jaccard_estimate_error(spark: SparkSession, sf_dir: str) -> DataFram
         MINHASH_A, MINHASH_B, MOD, _t as _t2, spark_char_hash)
     k = len(MINHASH_A)
     d = _t2(spark, sf_dir, "documents")
-    hashed = (d.select("doc_id", F.split("text", " ").alias("words"))
-              .select("doc_id", F.explode(F.expr(
-                  "CASE WHEN size(words) >= 3 THEN"
-                  " transform(sequence(1, size(words) - 2),"
-                  " i -> concat_ws(' ', element_at(words, i),"
-                  " element_at(words, i + 1), element_at(words, i + 2)))"
-                  " ELSE array() END")).alias("shingle"))
-              .distinct()
+    hashed = (shingles_of(d)
               .select("doc_id", F.expr(spark_char_hash("shingle")).alias("h"))
               .localCheckpoint(eager=True))
     sig = (hashed.groupBy("doc_id")

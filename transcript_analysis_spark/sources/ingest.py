@@ -204,10 +204,15 @@ def parse_vtt_time(time_str: str) -> float:
 
 
 def parse_vtt_text(doc: str) -> list[tuple[str, float, float]]:
-    """WEBVTT cue parse -> [(text, start, duration)], the yt-dlp
+    """WEBVTT cue parse -> [(text, start, duration)], after the yt-dlp
     fallback parser (`update_missing_transcripts.py:80-110`): cue
     header lines "start --> end", numeric cue ids and WEBVTT/Kind:
-    headers skipped, multi-line cue text joined."""
+    headers skipped, multi-line cue text joined.
+
+    Deliberate divergence from that parser: whitespace runs INSIDE a
+    cue line are collapsed to one space. The reference appends each
+    stripped line as-is, so for a line with a double space the raw
+    cue text here differs from the reference's."""
     out: list[tuple[str, float, float]] = []
     current_text: list[str] = []
     current_start: float | None = None
@@ -227,7 +232,8 @@ def parse_vtt_text(doc: str) -> list[tuple[str, float, float]]:
         elif line and not (re.match(r"^\d+$", line)
                            or line.startswith("WEBVTT")
                            or line.startswith("Kind:")):
-            # collapse intra-line whitespace runs: cue text is
+            # collapse intra-line whitespace runs (the divergence from
+            # the reference documented above): cue text is
             # whitespace-normalized downstream ("normalized text",
             # maintain_database-derived columns) and the roundtrip
             # property pins it; a double space inside a cue line
@@ -250,7 +256,10 @@ def fetch_transcripts(vids: DataFrame,
 
     1. primary API, with bounded retries on transient errors;
     2. on NoTranscriptError (or retries exhausted): VTT fallback,
-       parsed with the reference's own cue grammar;
+       parsed by ``parse_vtt_text`` — which, unlike the reference,
+       collapses whitespace runs inside a cue line, so the raw
+       ``text`` column of a fallback row can differ from the
+       reference's for such lines (a deliberate divergence);
     3. both failed -> ONE marker row ``start = -1`` (the reference's
        failed-transcript convention, SURVEY P5) with status 'failed';
     4. QuotaExhaustedError propagates and fails the job (403 abort).
