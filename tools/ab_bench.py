@@ -8,6 +8,12 @@ Usage: python tools/ab_bench.py <experiment> [reps]   (reps default 6)
 Experiments are registered in tools/ab_experiments.py's EXPERIMENTS
 (today only ``bloom2``); each returns a dict of
 {variant_name: builder(spark, sf_dir) -> DataFrame}.
+
+Both arms share one session, so the tool compares plans, not session
+settings: a static conf such as session.py's codegen cache size is
+fixed when the JVM starts and is the same in both arms. A/B such a
+conf at process level instead, by alternating
+``enginebench/run.py`` runs of the two trees.
 """
 
 from __future__ import annotations
@@ -28,11 +34,16 @@ def run_ab(spark, sf_dir: str, variants: dict, reps: int = 6,
     builders in both arms) exposed a large FIRST-POSITION penalty in
     a plain A,B,A,B pattern — the arm following a *different* heavy
     query read up to 36% slower than the same builder following
-    itself (ngram null A/B: 4.63 vs 2.97 min-of-5). Alternating the
-    visit order per rep (A,B then B,A) gives each arm the same
-    position distribution, so the penalty cancels in both min and
-    median instead of landing entirely on whichever arm was listed
-    first. The balance is exact only for an even ``reps``."""
+    itself (ngram null A/B: 4.63 vs 2.97 min-of-5). The cause was
+    codegen cache thrash: at Spark's default of 100 compiled classes
+    the other arm's plans evicted this arm's, which then recompiled.
+    session.py's CODEGEN_CACHE_ENTRIES now holds both arms' classes,
+    which removes that penalty. The alternation stays, against any
+    other order effect: visiting the arms A,B then B,A per rep gives
+    each the same position distribution, so a position penalty
+    cancels in both min and median instead of landing entirely on
+    whichever arm was listed first. The balance is exact only for an
+    even ``reps``."""
     names = list(variants)
     for name in names:  # warm each: plan + JIT + page cache
         for _ in range(warm):

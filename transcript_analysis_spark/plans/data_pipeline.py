@@ -759,13 +759,18 @@ def embedding_rp_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 def mllib_lsh_similar_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MLlib BucketedRandomProjectionLSH approximate similarity
     self-join (operators/ann.py — the X15/HNSW substitute): pairs
-    within euclidean distance 0.5 discovered through shared LSH
-    buckets, never an all-pairs scan. Rows-only check: the random
+    within euclidean distance 1.2 that share an LSH bucket. Threshold
+    1.2 sits just below this corpus's median pair distance (~1.41),
+    so the join returns the near tail (~0.1% of all pairs). Candidates
+    are not pruned: with bucket_length 0.25 each of the 2 tables has
+    about 4 buckets on these unit vectors, and the bucket join
+    evaluates ≈0.9·n² candidate distances at sf0.1 — more than the
+    n²/2 of an exact all-pairs scan. Rows-only check: the random
     projections (seeded, deterministic in Spark) are not reproducible
-    in SQL, so there is no DuckDB oracle — recall-vs-exact is instead
-    pinned by tests/test_ann.py against the brute-force join.
-    Threshold 1.2 sits just below this corpus's median pair distance
-    (~1.41), so the join returns the near tail (~0.1% of all pairs)."""
+    in SQL, so there is no DuckDB oracle. Instead tests/test_ann.py
+    pins recall against the brute-force join, and enginebench's
+    oracle (check_lsh_pairs) checks every returned pair and distance
+    against the brute-force exact set, with a recall floor."""
     from transcript_analysis_spark.operators.ann import \
         approx_similarity_pairs
     e = _t(spark, sf_dir, "embeddings")

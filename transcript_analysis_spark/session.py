@@ -19,6 +19,36 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Entries in Spark's compiled-class cache (the static
+# spark.sql.codegen.cache.maxEntries). Every cache miss is a Janino
+# compile, on the driver or in a task. Working sets, measured as
+# CodegenMetrics compile counts over repeated passes of each
+# enginebench workload's query set (local[4], seed-7 data; a pass's
+# compiles at an unbounded cache are the classes it adds):
+#   corpus_batch, 5 queries:     137 classes, 177 after 4 passes (AQE
+#                                plan variants of corpus_release_prep);
+#   dashboard_mixed, 12 queries: 124, 132 after 4 passes;
+#   streaming pipeline:          297 for store init and the first
+#                                batch, 513 after 5 more batches (each
+#                                later batch adds 29-77 new classes).
+# Spark's default of 100 holds none of these, so every pass evicted
+# what the next one needed: repeated corpus passes recompiled 110-130
+# of 137 classes, dashboard passes 114 of 124, stream batches ~270.
+# At 2000 repeated corpus passes compile 0-22 (corpus_release_prep's
+# AQE variants, settling), dashboard passes 0-8, and stream batches
+# only their new classes (29-77, the unbounded cache's counts).
+# The cache is a Guava cache of 4 segments that each evict on their
+# own at a quarter of the size, so a working set needs about 2x
+# headroom to stay resident; 2000 is ~4x the largest (stream, 513)
+# and holds another ~35 batches' new classes before LRU eviction
+# drops the stale ones. Retained classes cost no JIT headroom: after
+# 4 corpus passes the code heaps used 60-67 MB of 240 MB reserved
+# (65-72 MB at the default), Metaspace 158-159 MB (158-163 MB), and
+# block-at-a-time minhash and gopher times did not move (r14 kept
+# the default on a +36% reading there; see OPTIMIZATION_r14.md
+# section 3).
+CODEGEN_CACHE_ENTRIES = 2000
+
 
 def get_spark(app_name: str = "transcript-analysis-spark",
               master: str | None = None,
@@ -51,22 +81,11 @@ def get_spark(app_name: str = "transcript-analysis-spark",
         # note). Defaults also remove the documented risk of a
         # non-spilling SHJ build side OOMing on a size underestimate
         # at cluster scale (r13 ADVICE item 1).
-        # Whole-stage-codegen cache: left at Spark's default (100
-        # compiled classes) after a DELIBERATE r14 experiment. A null
-        # A/B found a +45% recompile penalty when two heavy queries
-        # alternate (their ~30+ codegen units thrash the cache; each
-        # miss is a driver-side Janino compile), and raising the cache
-        # to 3000 eliminates it — but a process-level A/B then showed
-        # the raised cache costing up to +36% on CPU-bound queries
-        # run block-at-a-time (minhash 1.04 -> 1.41 s min-of-5;
-        # retained generated classes pressure the JIT code cache), and
-        # the bench runs every query in its own block, so the default
-        # wins there. The alternation finding is documented in
-        # OPTIMIZATION_r14.md; the measurement-fairness problem it
-        # caused is fixed in tools/ab_bench.py (counterbalanced arm
-        # order), not by this conf.
-        # Keep broadcast autodetection on; 10MB default is fine for the
-        # dims here (region/nation/kernel tables are tiny).
+        # Sized to the plan working set: see CODEGEN_CACHE_ENTRIES.
+        .config("spark.sql.codegen.cache.maxEntries",
+                str(CODEGEN_CACHE_ENTRIES))
+        # Keep broadcast autodetection on, at 32 MB rather than Spark's
+        # 10 MB default (region/nation/kernel dims are far below either).
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
