@@ -9,14 +9,14 @@ computed columns and undercount the work.
 
 Output contract (r11 verdict item 1): the driver records only the LAST
 ~2,000 characters of stdout, so the final line must stay under
-MAX_FINAL_LINE_CHARS. The per-sample fields added in r11
-(queries_samples / queries_spread / queries_local_cal / query_class)
+MAX_FINAL_LINE_CHARS. Per-query fields beyond the minima once
 overflowed that capture and shipped BENCH_r11.json with parsed:null,
-silently disabling the cross-round bench gate. They now go on an
-EARLIER stdout line ({"metric": "headline_queries_detail", ...}) and
-into .local/bench_last.json (the full merged record, which
-tools/save_bench_baseline.py promotes to the tracked
-BENCH_BASELINE.json); the final line carries only the compact core.
+silently disabling the cross-round bench gate. Everything outside
+CORE_KEYS (queries_spread, the core count ``cpus``) goes on an EARLIER
+stdout line ({"metric": "headline_queries_detail", ...}) and into
+.local/bench_last.json (the full merged record, usable as
+``tools/release_check.py --baseline=PATH``); the final line carries
+only the compact core.
 """
 
 from __future__ import annotations
@@ -39,46 +39,6 @@ from transcript_analysis_spark.session import get_spark
 # machine_drift[cls] = calibration[cls] / ref; ~1.0 on an idle host.
 CALIBRATION_REFS = {"cpu": 0.21, "scan": 0.22, "shuffle": 0.60}
 
-# Resource-class assignment per headline query (r10 verdict item 1:
-# ONE constant-shape probe cannot model scan-heavy vs shuffle-heavy
-# vs JVM-heavy environment drift — contention hits IO-bound and
-# CPU-bound plans differently, leaving a ±20% per-class residual).
-# Hand-assigned from the plan audits in ROUND*_NOTES/SCALE.md and
-# RETAINED after the r12 fit experiment (SCALE.md §r12): three
-# datasets — two controlled-contention sittings and one real
-# busy-vs-quiet comparison — show the class dimension does not
-# separate measurably on this box (class-median drifts 1.14/1.19/1.17
-# under real load), so these stay plan-shape assignments and the
-# gate's sample-paired per-query layer carries the normalization.
-#   scan    — read/decode-dominated, map-only or single light agg
-#   shuffle — join/exchange-dominated (incl. window/stateful stores)
-#   cpu     — JVM expression work dominates (hashing, n-grams,
-#             smoothing kernels, sketch math)
-# Queries not listed default to "cpu" (the legacy single-probe class).
-QUERY_CLASS = {
-    "gopher_quality_flags": "scan",
-    "tumbling_hourly_event_stats": "scan",
-    "hll_distinct_profile": "scan",
-    "pricing_summary": "scan",
-    "brand_revenue": "scan",
-    "corpus_release_prep": "shuffle",
-    "pagerank_purchase_graph": "shuffle",
-    "mllib_lsh_similar_pairs": "shuffle",
-    "training_data_prep": "shuffle",
-    "sql_frontend_revenue_by_region": "shuffle",
-    "asof_purchase_context": "shuffle",
-    "session_windows_per_user": "shuffle",
-    "ngram_model_score": "cpu",
-    "islands_flagship": "cpu",
-    "island_param_sensitivity": "cpu",
-    "lm_perplexity_filter": "cpu",
-    "duplicate_ngram_coverage": "cpu",
-    "cms_heavy_hitters": "cpu",
-    "bloom_prefilter_contamination": "cpu",
-    "dsir_importance_weights": "cpu",
-    "minhash_lsh_candidate_pairs": "cpu",
-}
-
 # Fixed dataset for the scan probe: constant across rounds (testdata
 # is read-only), so the probe's cost is invariant to repo changes.
 SCAN_PROBE_PATH = "/root/testdata/sf0.1/lineitem.parquet"
@@ -91,8 +51,8 @@ SCAN_PROBE_PATH = "/root/testdata/sf0.1/lineitem.parquet"
 MAX_FINAL_LINE_CHARS = 1900
 
 # Keys allowed on the final (driver-captured) line. Everything else —
-# per-sample pairs, spreads, per-slot minis, the class map — is detail:
-# O(queries x samples) payload that only the local release gate needs.
+# the per-query spreads, the core count — is detail that only the
+# local release gate needs.
 CORE_KEYS = (
     "metric", "value", "unit", "queries", "sf", "calibrations",
     "calibration_refs", "machine_drifts", "calibration_sec",
@@ -140,10 +100,11 @@ def calibration_probes(spark) -> dict[str, float]:
       shuffle — 8M-row range exchanged into 2M groups; the exchange
                 dominates, compute per row is trivial.
 
-    Recorded beside the query timings so per-class environment
-    inflation is measurable: if the scan probe drifts +20% vs its
-    pinned reference, +20% on unchanged scan-class queries is the
-    machine, not the plans."""
+    Recorded beside the query timings so environment inflation is
+    measurable per resource kind. The release gate divides out only
+    the cpu probe's drift, as one global factor: per-class factors
+    changed no verdict that was not a plan-identical query (SCALE.md
+    §r12, CHANGES.md)."""
     def cpu():
         (spark.range(0, 800_000_000, 1, 32)
          .selectExpr("sum(id * 3 + (id % 7)) as s", "count(1) as c")
@@ -166,48 +127,6 @@ def calibration_probes(spark) -> dict[str, float]:
     return out
 
 
-def _mini_probe_fn(spark, cls: str):
-    """Quarter-scale constant-shape probe of one resource class —
-    cheap enough (~0.1-0.5 s) to run NEXT TO every individual query
-    sample. The end-of-run probes model per-class machine SPEED;
-    these model per-INSTANT machine noise."""
-    if cls == "scan" and not os.path.exists(SCAN_PROBE_PATH):
-        cls = "cpu"
-
-    def cpu():
-        (spark.range(0, 200_000_000, 1, 32)
-         .selectExpr("sum(id * 3 + (id % 7)) as s", "count(1) as c")
-         .write.format("noop").mode("overwrite").save())
-
-    def scan():
-        (spark.read.parquet(SCAN_PROBE_PATH)
-         .selectExpr("l_orderkey", "l_extendedprice")
-         .write.format("noop").mode("overwrite").save())
-
-    def shuffle():
-        (spark.range(0, 2_000_000, 1, 32)
-         .selectExpr("id % 500000 as k", "id")
-         .groupBy("k").sum("id")
-         .write.format("noop").mode("overwrite").save())
-
-    return {"cpu": cpu, "scan": scan, "shuffle": shuffle}[cls]
-
-
-def local_probe_once(spark, cls: str) -> float:
-    """One timed run of the class mini-probe — SAMPLE-PAIRED: called
-    immediately after each individual query sample so every sample
-    carries the contention index of its own instant. (The first r11
-    design ran one probe after all five samples; the busy-box
-    validation showed a burst can cover the whole sample window while
-    that single probe lands in a load gap — pairing closes it: if ANY
-    sample+probe pair lands in a gap, the gate's corrected min
-    recovers the clean time.)"""
-    fn = _mini_probe_fn(spark, cls)
-    t0 = time.time()
-    fn()
-    return round(time.time() - t0, 4)
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -222,8 +141,6 @@ def main() -> None:
     queries = {name: q for name, q in all_queries().items() if q.headline}
     timings: dict[str, float] = {}
     spreads: dict[str, list[float]] = {}
-    local_cal: dict[str, float] = {}
-    sample_pairs: dict[str, list[list[float]]] = {}
     for name, q in sorted(queries.items()):
         # Isolate queries from each other's heap garbage: with 20+
         # headliners in one JVM, later queries inherit the earlier
@@ -232,21 +149,15 @@ def main() -> None:
         # the headline count grew 13->21). One full GC between
         # queries restores a comparable starting heap.
         spark._jvm.System.gc()
-        cls = QUERY_CLASS.get(name, "cpu")
         df = q.fn(spark, sf_dir)
         df.write.format("noop").mode("overwrite").save()  # warm (plan + JIT + cache OS pages)
-        local_probe_once(spark, cls)                      # warm the probe too
         samples = []
-        probes = []
         for _ in range(5):  # min-of-5 steady-state runs (shields the
             t0 = time.time()  # metric from one-off system contention;
             # r2->r3 analysis showed single-query wall time swinging
             # 3.1-9.1s under ambient load on an unchanged plan)
             q.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             samples.append(time.time() - t0)
-            # sample-paired contention index: one mini-probe run of
-            # this query's class, timed at THIS sample's instant
-            probes.append(local_probe_once(spark, cls))
         order = sorted(range(5), key=lambda i: samples[i])
         timings[name] = round(samples[order[0]], 3)
         # per-query spread [min, median, max] (r9 verdict item 4): the
@@ -256,9 +167,6 @@ def main() -> None:
         spreads[name] = [round(samples[order[0]], 3),
                          round(samples[order[2]], 3),
                          round(samples[order[4]], 3)]
-        sample_pairs[name] = [[round(samples[i], 3), probes[i]]
-                              for i in range(5)]
-        local_cal[name] = min(probes)
 
     cals = calibration_probes(spark)
     total = round(sum(timings.values()), 3)
@@ -270,25 +178,19 @@ def main() -> None:
         # per-query [min, median, max] of the same 5 steady-state runs
         "queries_spread": spreads,
         "sf": sf_val,
+        # local[N]'s N: the gate compares only runs at equal core counts
+        "cpus": spark.sparkContext.defaultParallelism,
         # machine-speed controls (NOT in the total): constant-shape
-        # jobs vs their quiet-machine references — divide out
-        # PER-CLASS environment drift in cross-round comparisons
+        # jobs vs their quiet-machine references, recorded per class;
+        # the release gate divides out the cpu probe's drift only
         "calibrations": cals,
         "calibration_refs": {k: CALIBRATION_REFS[k] for k in cals
                              if CALIBRATION_REFS.get(k)},
         "machine_drifts": {k: round(v / CALIBRATION_REFS[k], 3)
                            for k, v in cals.items()
                            if CALIBRATION_REFS.get(k)},
-        "query_class": {q: QUERY_CLASS.get(q, "cpu") for q in timings},
-        # per-query-slot mini-probe seconds (min over the five paired
-        # probes): the gate's per-query noise reference
-        "queries_local_cal": local_cal,
-        # the raw (sample_sec, paired_probe_sec) pairs — the gate's
-        # corrected-min rule divides each sample by its own instant's
-        # contention index and takes the min
-        "queries_samples": sample_pairs,
-        # legacy single-probe fields (cpu class) so records stay
-        # comparable with pre-r11 BENCH_r*.json gate logic
+        # single-probe fields (cpu class): the release gate's one
+        # global drift factor, comparable with every BENCH_r*.json
         "calibration_sec": cals["cpu"],
     }
     if CALIBRATION_REFS.get("cpu"):
@@ -296,8 +198,8 @@ def main() -> None:
         out["machine_drift"] = round(cals["cpu"] / CALIBRATION_REFS["cpu"],
                                      3)
 
-    # full merged record -> gitignored sidecar (promoted to the tracked
-    # BENCH_BASELINE.json by tools/save_bench_baseline.py)
+    # full merged record -> gitignored sidecar (a --baseline=PATH for
+    # tools/release_check.py)
     local_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                              ".local")
     try:

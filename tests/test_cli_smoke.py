@@ -65,13 +65,9 @@ SELFCHECK_TOOLS = [
     "pipeline_probe.py",
     "scale_probe.py",
     "gen_scale_testdata.py",
-    # r13 optimization-round measurement tools — same clean-shell
-    # discipline so the r11/r12 boundary-defect class cannot recur
-    # through new tooling either.
+    # the A/B harness — same clean-shell discipline so the r11/r12
+    # boundary-defect class cannot recur through new tooling either.
     "ab_bench.py",
-    "dump_plans_r13.py",
-    "probe_sf1_r13.py",
-    "merge_bench_sittings.py",
 ]
 
 
@@ -94,37 +90,6 @@ def test_ab_bench_registers_only_open_experiments(tmp_path):
     assert "selfcheck OK: 1 experiments registered" in r.stdout, r.stdout
 
 
-def test_merge_bench_sittings_copies_query_fields_atomically(tmp_path):
-    # The winning (fastest) sitting for q1 recorded no queries_samples
-    # for it; the losing, newest sitting did. No q1 field may come from
-    # the loser — the stale sample is dropped, not carried over.
-    import json
-    winner = {"queries": {"q1": 1.0, "q2": 5.0},
-              "queries_spread": {"q1": 0.1, "q2": 0.5},
-              "queries_local_cal": {"q1": 1.1, "q2": 1.2},
-              "queries_samples": {"q2": [5.0, 5.1]},
-              "query_class": {"q1": "cpu", "q2": "scan"}}
-    loser = {"queries": {"q1": 2.0, "q2": 4.0},
-             "queries_spread": {"q1": 0.9, "q2": 0.4},
-             "queries_local_cal": {"q1": 1.9, "q2": 1.3},
-             "queries_samples": {"q1": [2.0, 2.2], "q2": [4.0, 4.1]},
-             "query_class": {"q1": "shuffle", "q2": "cpu"}}
-    (tmp_path / "sitA.json").write_text(json.dumps(winner))
-    (tmp_path / "sitB.json").write_text(json.dumps(loser))
-    out = tmp_path / "merged.json"
-    r = run_cli([os.path.join(TOOLS, "merge_bench_sittings.py"), str(out),
-                 str(tmp_path / "sitA.json"), str(tmp_path / "sitB.json")],
-                tmp_path)
-    assert r.returncode == 0, f"stderr:\n{r.stderr}"
-    merged = json.loads(out.read_text())
-    assert merged["merged_from_sittings"] == {"q1": "sitA", "q2": "sitB"}
-    for key in ("queries", "queries_spread", "queries_local_cal",
-                "queries_samples", "query_class"):
-        assert merged[key].get("q1") == winner[key].get("q1"), key
-        assert merged[key].get("q2") == loser[key].get("q2"), key
-    assert "q1" not in merged["queries_samples"]
-
-
 def test_run_query_list_from_clean_shell(tmp_path):
     # run_query.py's cheapest REAL path: --list imports the full plan
     # registry (no JVM) and prints every registered query.
@@ -142,68 +107,6 @@ def test_coverage_check_from_clean_shell(tmp_path):
     r = run_cli([os.path.join(TOOLS, "coverage_check.py")], tmp_path)
     assert r.returncode == 0, (
         f"stdout:\n{r.stdout}\nstderr:\n{r.stderr}")
-
-
-class TestSaveBenchBaselineCli:
-    """r12 ADVICE: `--round 0` fell through to the usage message while
-    `--round=0` was accepted, and a non-integer raised a bare
-    ValueError traceback. Both spellings must now reject 0 loudly and
-    non-integers must exit with the usage string, never a traceback.
-    """
-
-    def _run(self, args, tmp_path):
-        return run_cli(
-            [os.path.join(TOOLS, "save_bench_baseline.py"), *args],
-            tmp_path)
-
-    def test_no_args_usage(self, tmp_path):
-        r = self._run([], tmp_path)
-        assert r.returncode != 0
-        assert "usage:" in (r.stdout + r.stderr)
-        assert "Traceback" not in r.stderr
-
-    @pytest.mark.parametrize("spelling", [["--round", "0"], ["--round=0"]])
-    def test_round_zero_rejected_both_spellings(self, spelling, tmp_path):
-        r = self._run(spelling, tmp_path)
-        assert r.returncode != 0
-        assert "positive integer" in (r.stdout + r.stderr)
-        assert "Traceback" not in r.stderr
-
-    @pytest.mark.parametrize("spelling",
-                             [["--round", "twelve"], ["--round=twelve"]])
-    def test_non_integer_round_is_usage_not_traceback(self, spelling,
-                                                      tmp_path):
-        r = self._run(spelling, tmp_path)
-        assert r.returncode != 0
-        assert "usage:" in (r.stdout + r.stderr)
-        assert "Traceback" not in r.stderr
-
-    def test_valid_round_promotes(self, tmp_path):
-        # End-to-end happy path against a synthetic source record —
-        # verifies --round N parses and the promote message carries
-        # the round stamp. The tool writes to the REPO's tracked
-        # BENCH_BASELINE.json, so snapshot and restore it.
-        import json
-        src = tmp_path / "bench_src.json"
-        src.write_text(json.dumps(
-            {"sf": 0.1, "queries": {"q1": 1.0}, "metric": "m",
-             "value": 1.0, "unit": "sec"}))
-        tracked = os.path.join(ROOT, "BENCH_BASELINE.json")
-        before = None
-        if os.path.exists(tracked):
-            with open(tracked, "rb") as fh:
-                before = fh.read()
-        try:
-            r = self._run(["--round", "999", str(src)], tmp_path)
-            assert "Traceback" not in r.stderr
-            assert r.returncode == 0, f"{r.stdout}\n{r.stderr}"
-            assert "round=999" in r.stdout
-        finally:
-            if before is not None:
-                with open(tracked, "wb") as fh:
-                    fh.write(before)
-            elif os.path.exists(tracked):
-                os.remove(tracked)
 
 
 def test_bench_module_imports_from_clean_shell(tmp_path):

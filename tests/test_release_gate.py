@@ -78,259 +78,50 @@ def test_drift_factor_normalizes_machine_state():
         {"q": 3.0}, prev, None, 0.01)) == 1
 
 
-def test_class_factors_normalize_per_resource_class():
-    """r10 verdict item 1: a scan-contended box inflates scan-class
-    queries while the cpu probe looks idle — the per-class factor
-    exempts exactly the class whose probe drifted, and other classes
-    still gate on the global factor."""
-    prev = {"scan_q": 1.0, "cpu_q": 1.0}
-    cur = {"scan_q": 1.4, "cpu_q": 1.4}    # both +40% raw
-    qclass = {"scan_q": "scan", "cpu_q": "cpu"}
-    # the scan probe drifted 1.4x this run (scan contention); the cpu
-    # probe did not -> only cpu_q is a real regression
-    factors = {"scan": 1.0 / 1.4, "cpu": 1.0}
-    v = release_check.bench_regressions(cur, prev, None, 1.0,
-                                        factors, qclass)
-    assert len(v) == 1 and v[0].startswith("cpu_q")
-    # clamp applies per class too: a corrupt probe cannot exempt a 3x
-    v = release_check.bench_regressions({"scan_q": 3.0}, prev, None,
-                                        1.0, {"scan": 0.01}, qclass)
-    assert len(v) == 1
-    # unclassified queries fall back to the global factor
-    v = release_check.bench_regressions(
-        {"other_q": 1.4}, {"other_q": 1.0}, None, 1.0 / 1.4,
-        {"scan": 1.0}, {})
-    assert v == []
-
-
-def test_local_factors_take_precedence_per_query():
-    """r11 busy-box finding: a contention burst can cover one query's
-    measurement window and be gone before the end-of-run probes — the
-    per-query temporally-local mini-probe ratio divides it out of
-    exactly that query, beating both the class and global factors."""
-    prev = {"q1": 1.0, "q2": 1.0}
-    cur = {"q1": 1.6, "q2": 1.6}          # both +60% raw
-    qclass = {"q1": "shuffle", "q2": "shuffle"}
-    # q1's local probe saw the same burst (ratio 1/1.6); q2's did not
-    local = {"q1": 1.0 / 1.6, "q2": 1.0}
-    v = release_check.bench_regressions(
-        cur, prev, None, 1.0, {"shuffle": 1.0}, qclass, local)
-    assert len(v) == 1 and v[0].startswith("q2")
-    # local factor is clamped like the others
-    v = release_check.bench_regressions(
-        {"q1": 3.0}, prev, None, 1.0, {}, {}, {"q1": 0.01})
-    assert len(v) == 1
-    # absent local factor falls back to class factor
-    v = release_check.bench_regressions(
-        {"q3": 1.4}, {"q3": 1.0}, None, 1.0, {"scan": 1.0 / 1.4},
-        {"q3": "scan"}, {})
-    assert v == []
-    # a local factor > the class factor can only EXCUSE, never
-    # amplify: the minis are noisy and letting them inflate
-    # manufactured a false +28% from a +4% raw drift (r11 validation
-    # sitting 1) — here a 1.3 local ratio must NOT turn +10% raw
-    # into a flagged +43%
-    v = release_check.bench_regressions(
-        {"q4": 1.1}, {"q4": 1.0}, None, 1.0, {}, {}, {"q4": 1.3})
-    assert v == []
-
-
-def test_sample_paired_corrected_min_recovers_gap_samples():
-    """r11 validation sitting 2: a burst covered the whole five-sample
-    window while the single after-probe landed in a load gap (+57%
-    raw, barely excused). With SAMPLE-PAIRED probes the gate takes
-    min_i(sample_i * excuse_i): one sample+probe pair in a quiet gap
-    recovers the clean time; a probe-only burst can't amplify."""
-    prev = {"q": 1.0}
-    # all samples inflated ~1.6x; probes saw the burst on 4 slots,
-    # the 5th pair landed in a gap (sample 1.05, probe at baseline)
-    pairs = [[1.6, 0.32], [1.62, 0.33], [1.58, 0.31], [1.61, 0.34],
-             [1.05, 0.205]]
-    prev_cal = 0.2
-    corrected = {"q": min(s * min(1.0, max(0.5, prev_cal / p))
-                          for s, p in pairs)}
-    v = release_check.bench_regressions(
-        {"q": 1.58}, prev, None, 1.0, {}, {}, {}, corrected)
-    assert v == []
-    # a GENUINE +60% regression under the same burst pattern: burst
-    # slots read real x burst (2.56) and excuse back to ~1.6; the
-    # quiet-slot pair reads 1.6 with a near-clean probe — corrected
-    # min stays ~1.56-1.6 and the gate still flags it
-    pairs = [[2.56, 0.32], [2.6, 0.33], [2.53, 0.31], [2.58, 0.34],
-             [1.6, 0.205]]
-    corrected = {"q": min(s * min(1.0, max(0.5, prev_cal / p))
-                          for s, p in pairs)}
-    v = release_check.bench_regressions(
-        {"q": 2.53}, prev, None, 1.0, {}, {}, {}, corrected)
-    assert len(v) == 1
-
-
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_latest_recorded_bench_always_yields_usable_baseline():
     """The gate must never silently lose its baseline again (r11:
     BENCH_r11.json shipped parsed:null and latest_recorded_bench
-    returned None, disabling the cross-round gate). With any
-    BENCH_r*.json or BENCH_BASELINE.json in the tree, the resolver
-    returns a gate-usable record at the driver's scale factor."""
+    returned None, disabling the cross-round gate). With any parsable
+    BENCH_r*.json in the tree, the resolver returns a gate-usable
+    record at the driver's scale factor and core count."""
     rec = release_check.latest_recorded_bench()
     assert rec is not None
     assert rec["sf"] == 0.1   # the driver benches at sf0.1
-    assert rec["file"].startswith(("BENCH_r", "BENCH_BASELINE"))
+    assert rec["cpus"] == 32  # ...on 32 cores
+    assert rec["file"].startswith("BENCH_r")
     assert rec["queries"] and all(
         isinstance(v, float) for v in rec["queries"].values())
-    # the tracked baseline (round-stamped, full per-sample fields)
-    # wins over driver records of the same or lower round, so the
-    # sample-paired + per-class normalizations run from a tracked file
-    if rec["file"] == "BENCH_BASELINE.json":
-        assert rec["local_cal"] and rec["samples"]
+    # a driver record whose line overflowed the tail capture is
+    # unusable, and the resolver falls back past it
+    assert release_check._load_record(
+        os.path.join(ROOT, "BENCH_r11.json")) is None
 
 
-def test_tracked_baseline_contract():
-    """BENCH_BASELINE.json (promoted each round via
-    tools/save_bench_baseline.py) must stay gate-loadable: a flat
-    bench record with an integer round stamp, driver-scale sf, and
-    the rich per-sample fields that justify preferring it over the
-    compact driver records."""
-    import json
-    path = os.path.join(ROOT, "BENCH_BASELINE.json")
-    if not os.path.exists(path):
-        return
-    raw = json.loads(open(path).read())
-    assert isinstance(raw.get("round"), int)
-    rec = release_check._load_record(path)
-    assert rec is not None and rec["sf"] == 0.1
-    assert rec["queries"] and rec["local_cal"] and rec["samples"]
-    # every query with samples agrees: min sample == headline min
-    for name, pairs in rec["samples"].items():
-        assert rec["queries"][name] == min(round(s, 3)
-                                           for s, _ in pairs)
-
-
-def test_unparsable_driver_record_is_reconstructed_not_fatal():
-    """BENCH_r11.json itself — the record whose overflow caused the
-    r11 failure — must now tail-reconstruct: per-query minima equal
-    to min-of-samples, local cal equal to min paired probe, and the
-    legacy machine_drift recovered from the surviving tail end."""
-    path = os.path.join(ROOT, "BENCH_r11.json")
-    if not os.path.exists(path):
-        return
-    rec = release_check._load_record(path)
-    assert rec is not None and rec.get("reconstructed")
-    # values the r11 judge recovered by hand from the same fragment
-    assert rec["queries"]["ngram_model_score"] == 2.533
-    assert rec["queries"]["pricing_summary"] == 0.286
-    assert rec["local_cal"]["pricing_summary"] == 0.1277
-    assert rec["drift"] == 0.91
-    assert len(rec["queries"]) >= 15
-    assert rec["spread"]["pricing_summary"] == [0.286, 0.292, 0.318]
-
-
-def test_reconstruct_ignores_non_pair_fragments():
-    """queries_spread-style [min, med, max] lists and garbage must not
-    be mistaken for (sample, probe) pair arrays."""
-    tail = ('"a": [0.1, 0.2, 0.3], "b": [[1.5, 0.2], [1.2, 0.25]], '
-            '"c": [[1, 2, 3]], "machine_drift": 0.95}')
-    rec = release_check.reconstruct_from_tail(tail)
-    assert set(rec["queries"]) == {"b"}
-    assert rec["queries"]["b"] == 1.2
-    assert rec["queries_local_cal"]["b"] == 0.2
-    assert rec["machine_drift"] == 0.95
-    assert release_check.reconstruct_from_tail("no json here") is None
-
-
-def test_corrected_minima_guards_zero_probes():
-    """All-zero paired probes (malformed record) degrade that query to
-    the coarser factors instead of crashing on an empty min() (r11
-    advice item 3)."""
-    prev_cal = {"q": 0.2, "z": 0.2}
-    samples = {"q": [[1.0, 0.0], [1.1, 0.0]],       # all probes zero
-               "z": [[1.0, 0.4], [0.9, 0.0]],       # one valid pair
-               "w": [[1.0, 0.3]]}                   # no prev cal
-    out = release_check.corrected_minima(samples, prev_cal)
-    assert "q" not in out and "w" not in out
-    assert out["z"] == 1.0 * min(1.0, max(0.5, 0.2 / 0.4))
-
-
-def test_corrected_excuse_composes_relative_to_class_factor():
-    """r11 advice item 1: the sample-paired excuse and the per-class
-    drift factor witness the SAME contention — they must not multiply.
-    A box uniformly 20% slower (class factor 1/1.2, every paired probe
-    also 1.2x) with a REAL +30% regression: raw 1.56, both excuses
-    ~0.833. Product would read 1.56*0.833*0.833 = 1.08 (+8%, masked);
-    composed-relative reads 1.56*0.833 = 1.30 (+30%, flagged)."""
-    prev = {"q": 1.0}
-    prev_cal = {"q": 0.2}
-    # real 1.3 regression, machine 1.2x slow: samples ~1.56, probes 0.24
-    pairs = [[1.56, 0.24], [1.57, 0.24], [1.56, 0.24], [1.58, 0.24],
-             [1.56, 0.24]]
-    corrected = release_check.corrected_minima({"q": pairs}, prev_cal)
-    v = release_check.bench_regressions(
-        {"q": 1.56}, prev, None, 1.0, {"cpu": 1.0 / 1.2}, {"q": "cpu"},
-        {}, corrected)
-    assert len(v) == 1 and v[0].startswith("q:")
-    # and a CLEAN query under the same uniform slowdown still passes:
-    # raw 1.2, excused back to ~1.0 by either factor alone
-    pairs = [[1.2, 0.24]] * 5
-    corrected = release_check.corrected_minima({"q": pairs}, prev_cal)
-    v = release_check.bench_regressions(
-        {"q": 1.2}, prev, None, 1.0, {"cpu": 1.0 / 1.2}, {"q": "cpu"},
-        {}, corrected)
-    assert v == []
-
-
-def test_sign_aware_composition_tightens_on_a_fast_box():
-    """r12 advice (medium): with excuse <= 1 by construction,
-    min(base, excuse) could never exceed 1, so a box FASTER than the
-    baseline's recording conditions (base > 1) lost the tighten
-    signal and masked a real regression. Sign-aware composition
-    multiplies opposite-sign signals.
-
-    Scenario: baseline recorded on a 1.4x-contended box (class factor
-    1.4/1.0 = 1.4 when the current box is idle). A query that reads
-    +10% raw on the idle box is really ~+54% in baseline-equivalent
-    terms. Clean paired probes (excuse = 1) must NOT cancel the
-    tighten."""
-    prev = {"q": 1.0}
-    prev_cal = {"q": 0.28}          # baseline cal recorded 1.4x slow
-    pairs = [[1.1, 0.2]] * 5        # idle probes, raw only +10%
-    corrected = release_check.corrected_minima({"q": pairs}, prev_cal)
-    v = release_check.bench_regressions(
-        {"q": 1.1}, prev, None, 1.0, {"cpu": 1.4}, {"q": "cpu"},
-        {}, corrected)
-    assert len(v) == 1 and v[0].startswith("q:")   # 1.1 * 1.4 = 1.54
-    # the same reading WITH a genuine same-instant burst (probes 2x
-    # the baseline cal) is excused multiplicatively: 1.4 * 0.5 = 0.7
-    pairs = [[1.1, 0.56]] * 5
-    corrected = release_check.corrected_minima({"q": pairs}, prev_cal)
-    v = release_check.bench_regressions(
-        {"q": 1.1}, prev, None, 1.0, {"cpu": 1.4}, {"q": "cpu"},
-        {}, corrected)
-    assert v == []
-    # the local-factor path is intentionally NOT multiplied: local is
-    # a full per-query measurement (can exceed 1, carries its own
-    # tighten) with per-query precedence — local = 1.0 (this query's
-    # window at baseline parity) correctly overrides the class-level
-    # tighten, unlike the corrected path whose excuse is capped at 1
-    # and can never express parity
-    v = release_check.bench_regressions(
-        {"q": 1.1}, prev, None, 1.0, {"cpu": 1.4}, {"q": "cpu"},
-        {"q": 1.0}, {})
-    assert v == []
-    # and a local that itself reads tighten keeps flagging
-    v = release_check.bench_regressions(
-        {"q": 1.1}, prev, None, 1.0, {"cpu": 1.4}, {"q": "cpu"},
-        {"q": 1.4}, {})
-    assert len(v) == 1 and v[0].startswith("q:")
+def test_core_count_mismatch_is_not_compared():
+    """A 4-core run against the 32-core driver baseline read
+    islands_flagship 1.088 -> 3.930 s with unchanged code: the core
+    count, not a regression. Like the sf, a core-count mismatch prints
+    both values and is not compared; equal shapes are compared."""
+    prev = {"file": "BENCH_r14.json", "sf": 0.1, "cpus": 32}
+    msg = release_check.not_comparable(prev, {"sf": 0.1, "cpus": 4})
+    assert msg and msg.startswith("not comparable: 32 vs 4 cores")
+    msg = release_check.not_comparable(prev, {"sf": 1.0, "cpus": 32})
+    assert msg and "sf=0.1 vs sf=1.0" in msg
+    assert release_check.not_comparable(prev, {"sf": 0.1, "cpus": 32}) is None
+    # a record that never stated its core count is not assumed equal
+    assert release_check.not_comparable(prev, {"sf": 0.1}) is not None
 
 
 def test_bench_final_line_fits_driver_tail():
     """r11 verdict item 2, the driver-contract canary: bench.py's
-    compact core line for a full 21-headliner record (the real query
-    names, worst-case float widths) stays under MAX_FINAL_LINE_CHARS,
-    and a simulated 2,000-char driver tail capture of the two-line
-    stdout still yields a parsable record with the queries dict."""
+    compact core line for a full record of the registry's headline
+    queries (the real names, worst-case float widths) stays under
+    MAX_FINAL_LINE_CHARS, and a simulated 2,000-char driver tail
+    capture of the two-line stdout still yields a parsable record with
+    the queries dict."""
     import importlib.util as _ilu
     import json
     spec = _ilu.spec_from_file_location(
@@ -338,21 +129,18 @@ def test_bench_final_line_fits_driver_tail():
     bench = _ilu.module_from_spec(spec)
     spec.loader.exec_module(bench)
 
-    names = sorted(set(bench.QUERY_CLASS) | {
-        "sql_frontend_revenue_by_region", "bloom_prefilter_contamination"})
+    from transcript_analysis_spark.plans import all_queries
+    names = sorted(n for n, q in all_queries().items() if q.headline)
     assert len(names) >= 21
     full = {
         "metric": "headline_queries_total_wall",
         "value": 123.456, "unit": "sec",
         "queries": {n: 123.456 for n in names},
         "queries_spread": {n: [123.456, 123.456, 123.456] for n in names},
-        "sf": 0.1,
+        "sf": 0.1, "cpus": 32,
         "calibrations": {"cpu": 0.2345, "scan": 0.2345, "shuffle": 0.6345},
         "calibration_refs": dict(bench.CALIBRATION_REFS),
         "machine_drifts": {"cpu": 1.234, "scan": 1.234, "shuffle": 1.234},
-        "query_class": {n: "shuffle" for n in names},
-        "queries_local_cal": {n: 0.2345 for n in names},
-        "queries_samples": {n: [[123.456, 0.2345]] * 5 for n in names},
         "calibration_sec": 0.2345, "calibration_ref_sec": 0.21,
         "machine_drift": 1.234,
     }

@@ -1,13 +1,16 @@
 """The scan gate (r9 verdict item 1): the repo-wide "no unexplained
-multi-scan plan" invariant, mechanically enforced at release time.
-These tests cover the pins-file contract and the gate's decision
-logic without compiling plans (the real compile+execute pass runs in
-tools/release_check.py step 5); the plan-shape assertions themselves
-live in tests/test_physical_plans.py."""
+multi-scan plan" invariant, mechanically enforced at release time,
+and the work gate beside it (per-query Spark work counters vs pinned
+ceilings). These tests cover both pins files' contracts and both
+gates' decision logic without a JVM; one test runs the real gate
+subprocess against the committed pins. The plan-shape assertions
+themselves live in tests/test_physical_plans.py."""
 
 import importlib.util
 import json
 import os
+import subprocess
+import sys
 
 import pytest
 
@@ -100,3 +103,115 @@ def test_gate_fails_on_build_error(monkeypatch):
         lambda spark, sf: iter([("broken", {}, "BUILD ERROR X")]))
     v = scan_audit.gate(None, "unused")
     assert len(v) == 1 and "BUILD ERROR" in v[0]
+
+
+# --- the work gate: per-query Spark work counters vs pinned ceilings
+
+def _fake_work_gate(monkeypatch, measured, pins, tmp_path):
+    monkeypatch.setattr(scan_audit, "WORK_SF_DIR", str(tmp_path))
+    monkeypatch.setattr(scan_audit, "load_work_pins", lambda: pins)
+    monkeypatch.setattr(scan_audit, "work_counters",
+                        lambda spark: measured)
+    return scan_audit.work_gate(None)
+
+
+def _counters(**over):
+    c = dict.fromkeys(scan_audit.WORK_COUNTERS, 10)
+    c.update(over)
+    return c
+
+
+def test_work_pins_file_contract():
+    """Every headline query is pinned, with every gated counter, and
+    nothing else is: the committed ceilings are what the gate reads."""
+    from transcript_analysis_spark.plans import all_queries
+    headline = {n for n, q in all_queries().items() if q.headline}
+    pins = scan_audit.load_work_pins()
+    assert set(pins) == headline
+    for name, pin in pins.items():
+        assert set(pin) == set(scan_audit.WORK_COUNTERS), name
+        assert all(isinstance(v, int) and v >= 0 for v in pin.values())
+    assert "_comment" in json.load(open(scan_audit.WORK_PINS_PATH))
+
+
+def test_work_gate_green_at_ceilings(monkeypatch, tmp_path, capsys):
+    v = _fake_work_gate(monkeypatch, {"q": _counters()},
+                        {"q": _counters()}, tmp_path)
+    assert v == [] and "note:" not in capsys.readouterr().out
+
+
+def test_work_gate_flags_counter_above_ceiling(monkeypatch, tmp_path):
+    """One more Exchange's rows (an un-fused plan) is a violation
+    naming the query and the counter."""
+    v = _fake_work_gate(monkeypatch,
+                        {"q": _counters(**{"rows.Exchange": 11})},
+                        {"q": _counters()}, tmp_path)
+    assert len(v) == 1
+    assert v[0].startswith("q: rows.Exchange 11 exceeds pinned ceiling 10")
+
+
+def test_work_gate_notes_counter_below_ceiling(monkeypatch, tmp_path,
+                                               capsys):
+    v = _fake_work_gate(monkeypatch, {"q": _counters(jobs=7)},
+                        {"q": _counters()}, tmp_path)
+    assert v == []
+    out = capsys.readouterr().out
+    assert "note: q jobs 7 is below its pinned ceiling 10" in out
+    assert "tighten the pin" in out
+
+
+def test_work_gate_slack_covers_only_the_jittering_counters(
+        monkeypatch, tmp_path, capsys):
+    """Shuffle bytes and partial-aggregate rows move a little with
+    unchanged code; inside their slack they neither fail nor ask for
+    a tighter pin, past it they fail. Exact counters have no slack."""
+    pin = _counters(shuffle_write_bytes=100_000,
+                    **{"rows.HashAggregate": 100_000})
+    inside = _counters(shuffle_write_bytes=100_900,
+                       **{"rows.HashAggregate": 96_000})
+    assert _fake_work_gate(monkeypatch, {"q": inside}, {"q": pin},
+                           tmp_path) == []
+    assert "note:" not in capsys.readouterr().out
+    past = _counters(shuffle_write_bytes=101_100,
+                     **{"rows.HashAggregate": 105_100})
+    v = _fake_work_gate(monkeypatch, {"q": past}, {"q": pin}, tmp_path)
+    assert [x.split(" exceeds")[0] for x in v] == [
+        "q: shuffle_write_bytes 101100", "q: rows.HashAggregate 105100"]
+    assert "by more than 1%" in v[0] and "by more than 5%" in v[1]
+
+
+def test_work_gate_flags_unpinned_headline_query(monkeypatch, tmp_path):
+    v = _fake_work_gate(monkeypatch,
+                        {"q": _counters(), "new_q": _counters()},
+                        {"q": _counters()}, tmp_path)
+    assert len(v) == 1 and v[0].startswith("new_q: headline query has "
+                                           "no work pin")
+
+
+def test_work_gate_notes_stale_pin(monkeypatch, tmp_path, capsys):
+    v = _fake_work_gate(monkeypatch, {"q": _counters()},
+                        {"q": _counters(), "gone_q": _counters()},
+                        tmp_path)
+    assert v == []
+    assert "note: stale work pin for 'gone_q'" in capsys.readouterr().out
+
+
+def test_work_gate_fails_when_pinned_dataset_missing(monkeypatch,
+                                                     tmp_path):
+    """The gate never skips: a missing dataset is a violation."""
+    v = _fake_work_gate(monkeypatch, {"q": _counters()},
+                        {"q": _counters()}, tmp_path / "absent")
+    assert len(v) == 1 and "is missing" in v[0]
+
+
+def test_real_gate_green_against_committed_pins():
+    """The real gate subprocess — work pass in a fresh JVM, then the
+    compiled scan ceilings — is green against the committed pins, so
+    a plan-work or scan-count regression fails the test suite."""
+    r = subprocess.run(
+        [sys.executable, os.path.join(ROOT, "tools", "scan_audit.py"),
+         "--gate"], capture_output=True, text=True, timeout=1200)
+    out = r.stdout.replace("\r", "\n")
+    assert "-- work gate: 0 violation(s)" in out, out[-3000:]
+    assert "-- scan gate: 0 violation(s)" in out, out[-3000:]
+    assert r.returncode == 0, r.stderr[-3000:]

@@ -1,11 +1,14 @@
-"""Plan audit — regenerates PLANS.md: the executed physical plan of
-every headline query plus automated checks of the plan properties the
-engine promises at scale (pushdown reaching the scan, dimension
-broadcasts, no cartesian products, no Python evaluation in JVM-only
-plans).
+"""Plan audit — regenerates PLANS.md: the post-execution AQE final
+plan (isFinalPlan=true) of every headline query plus automated checks
+of the plan properties the engine promises at scale (pushdown reaching
+the scan, dimension broadcasts, no cartesian products, no Python
+evaluation in JVM-only plans). Each query is executed first, so the
+plan shows what ran: AQE's runtime join conversions and partition
+coalescing, which a compiled (pre-execution) plan cannot show.
 
 Usage: python tools/plan_audit.py [sf_dir]   (default sf0.001 — plan
-SHAPE is scale-invariant; AQE may re-plan sizes at runtime).
+SHAPE is scale-invariant; AQE's runtime choices follow the data
+sizes, so a join can differ at a larger scale factor).
 """
 
 from __future__ import annotations
@@ -52,9 +55,10 @@ def main() -> None:
     spark = get_spark("plan-audit", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
 
-    out = ["# PLANS — headline query physical plans (generated)",
+    out = ["# PLANS — headline query final physical plans (generated)",
            "",
            f"Regenerate: `python tools/plan_audit.py` (sf_dir={sf_dir}).",
+           "Each plan is AQE's final plan, printed after the query ran.",
            "Plan shape is the 100 TB contract: pushdown at the scan,",
            "dims broadcast, no cartesian products, JVM-side hot paths.",
            ""]
@@ -62,6 +66,9 @@ def main() -> None:
         if not q.headline:
             continue
         df = q.fn(spark, sf_dir)
+        # executing THIS DataFrame finalizes its cached adaptive plan
+        # (a write would run a separate execution)
+        df.collect()
         plan = df._jdf.queryExecution().executedPlan().toString()
         notes = audit(plan)
         out.append(f"## {name}")

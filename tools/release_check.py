@@ -15,14 +15,26 @@ single PASS/FAIL verdict:
 4. bench regression gate: each headline query compared against the
    most recent recorded BENCH_r*.json — >25% slower on a query that
    took >=0.5 s fails the gate (the r4->r5 ngram_model_score drift
-   would have been caught at commit time). New queries pass
-   automatically; sub-0.5 s queries are exempt (pure noise regime).
-5. scan gate: tools/scan_audit.py --gate — every registered query's
-   compiled same-table scan count vs its pinned ceiling
-   (tools/scan_pins.json), plus zero-runtime-reuse detection for the
-   >=4-scan set minus documented exceptions. Catches the multi-scan
-   plan-regression class the r9 exchange-reuse doctrine was built on,
-   mechanically (r9 verdict item 1).
+   would have been caught at commit time), after dividing out one
+   global machine-drift factor (the cpu calibration probe's, clamped
+   to [0.5, 2]) and exempting a time inside the baseline's own
+   [min, median, max] run band (capped at 2x). New queries pass
+   automatically; a query is exempt only when both sides are under
+   0.5 s. Runs at a different sf or core count are not compared:
+   the step prints both values instead. This is the only check for
+   slowdowns where the work is identical (more compiling, a slower
+   expression); plan-shape regressions are caught exactly by step 5.
+5. scan + work gate: tools/scan_audit.py --gate — the work gate
+   (each headline query's Spark work counters from the event log:
+   jobs, stages, tasks, shuffle, spill, per-operator rows, at a fixed
+   dataset and shape, vs tools/work_pins.json ceilings; equal code
+   gives equal counters, bar a small measured slack on shuffle bytes
+   and partial-aggregate rows, so there is no machine noise to
+   model), then every
+   registered query's compiled same-table scan count vs its pinned
+   ceiling (tools/scan_pins.json), plus zero-runtime-reuse detection
+   for the >=4-scan set minus documented exceptions (r9 verdict
+   item 1).
 6. differential fuzz: tools/diff_fuzz.py — 60 seeded GENERATED query
    plans (join chains, filters, grouped exact aggregates, NULL
    injection, window frames, as-of/interval joins, scalar string/
@@ -35,11 +47,9 @@ Usage: python tools/release_check.py [sf_dir] [--no-bench-gate]
                                      [--bench-only] [--baseline=PATH]
 (default /root/testdata/sf0.01; bench always runs at
 $SPARK_GRAFT_SF_DIR or its sf0.1 default). --bench-only runs steps
-1 + 4 alone — the loop for validating gate stability across
-consecutive runs without paying for the oracle sweep each time;
---baseline=PATH gates against a locally-recorded bench JSON instead
-of the newest BENCH_r*.json (validation of per-class normalization
-before the driver has recorded an r11+ baseline).
+1 + 4 alone; --baseline=PATH gates against a locally-recorded bench
+JSON (e.g. .local/bench_last.json from a run on this machine) instead
+of the newest BENCH_r*.json.
 Exit code 0 = releasable.
 """
 
@@ -65,68 +75,12 @@ BENCH_DRIFT_TOLERANCE = 0.25   # fail a query >25% slower than last round
 BENCH_GATE_FLOOR_SEC = 0.5     # ignore sub-noise-floor queries
 
 
-def _bench_fields(inner: dict, fname: str, outer_sf=None) -> dict:
-    """Normalize one bench record (raw bench.py line, driver-wrapped
-    parsed dict, or tail reconstruction) to the gate's field set."""
-    return {
-        "file": fname,
-        "sf": inner.get("sf", outer_sf),
-        "queries": dict(inner.get("queries", {})),
-        "spread": dict(inner.get("queries_spread", {})),
-        "drift": inner.get("machine_drift"),
-        "drifts": dict(inner.get("machine_drifts", {})),
-        "query_class": dict(inner.get("query_class", {})),
-        "local_cal": dict(inner.get("queries_local_cal", {})),
-        "samples": dict(inner.get("queries_samples", {})),
-    }
-
-
-def reconstruct_from_tail(tail: str) -> dict | None:
-    """Partial bench record recovered from a driver BENCH_r*.json
-    whose stdout line overflowed the 2,000-char tail capture
-    (BENCH_r11.json shipped this way — r11 verdict item 1). Every
-    complete ``"name": [[sample, probe], ...]`` fragment of
-    queries_samples yields that query's min (the headline number),
-    its local cal (min paired probe), and its spread; the trailing
-    legacy calibration fields usually survive the cut too. Returns
-    None when the tail holds no usable fragment."""
-    queries, local_cal, samples, spread = {}, {}, {}, {}
-    for m in re.finditer(
-            r'"([a-z0-9_]+)":\s*(\[\[[0-9eE+\-.,\s\[\]]*?\]\])', tail):
-        try:
-            pairs = json.loads(m.group(2))
-        except ValueError:
-            continue
-        if not (isinstance(pairs, list) and pairs
-                and all(isinstance(p, list) and len(p) == 2
-                        and all(isinstance(x, (int, float)) for x in p)
-                        for p in pairs)):
-            continue
-        name = m.group(1)
-        ss = sorted(s for s, _ in pairs)
-        queries[name] = round(ss[0], 3)
-        spread[name] = [round(ss[0], 3), round(ss[len(ss) // 2], 3),
-                        round(ss[-1], 3)]
-        probes = [p for _, p in pairs if p]
-        if probes:
-            local_cal[name] = min(probes)
-        samples[name] = pairs
-    if not queries:
-        return None
-    rec = {"queries": queries, "queries_spread": spread,
-           "queries_local_cal": local_cal, "queries_samples": samples}
-    m = re.search(r'"machine_drift":\s*([0-9.]+)\s*}\s*$', tail)
-    if m:
-        rec["machine_drift"] = float(m.group(1))
-    return rec
-
-
 def _load_record(path: str) -> dict | None:
-    """One BENCH record file -> gate fields, or None if unusable.
-    Accepts a raw bench.py line saved directly, a driver wrapper
-    ({"parsed": {...}, "tail": ..., "sf": ...}), and — when parsed is
-    null because the line overflowed the driver's tail capture — a
-    reconstruction from the tail fragment."""
+    """One bench record file -> gate fields, or None if unusable:
+    {file, sf, cpus, queries, spread, drift}. Accepts a raw bench.py
+    record saved directly (.local/bench_last.json) and a driver
+    wrapper ({"parsed": {...}, "cpus": ..., "sf": ...}); a wrapper
+    whose parsed is null is unusable. cpus is None when unrecorded."""
     try:
         data = json.loads(open(path).read())
     except (OSError, ValueError):
@@ -135,168 +89,75 @@ def _load_record(path: str) -> dict | None:
         return None
     inner = data.get("parsed") if "parsed" in data else data
     if not isinstance(inner, dict) or not inner.get("queries"):
-        inner = (reconstruct_from_tail(data["tail"])
-                 if isinstance(data.get("tail"), str) else None)
-        if inner is None:
-            return None
-        rec = _bench_fields(inner, os.path.basename(path), data.get("sf"))
-        rec["reconstructed"] = True
-        return rec
-    return _bench_fields(inner, os.path.basename(path), data.get("sf"))
+        return None
+    return {
+        "file": os.path.basename(path),
+        "sf": inner.get("sf", data.get("sf")),
+        "cpus": inner.get("cpus", data.get("cpus")),
+        "queries": dict(inner["queries"]),
+        "spread": dict(inner.get("queries_spread", {})),
+        "drift": inner.get("machine_drift"),
+    }
 
 
 def latest_recorded_bench(baseline_path: str | None = None
                           ) -> dict | None:
-    """Gate baseline: fields of the best available bench record, or
-    None if nothing usable is recorded yet —
-    {file, sf, queries, spread, drift, drifts, query_class,
-    local_cal, samples}. Spread ([min, median, max], since r10) is {};
-    drift (single-probe) None and drifts (per-class, since r11) {}
-    for records predating those fields.
-
-    Resolution order (r11 verdict items 1+3):
-      1. ``baseline_path`` when given (validation runs).
-      2. The tracked BENCH_BASELINE.json — the full-field record the
-         builder promotes each round via tools/save_bench_baseline.py
-         — when its ``round`` is >= the highest PARSABLE driver round
-         (driver records deliberately carry only the compact core, so
-         the tracked file is the sample-paired/per-class source).
-      3. The highest-round BENCH_r*.json that parses; a record with
-         parsed:null is tail-reconstructed, and skipped (falling back
-         to the next round down) only if reconstruction also fails —
-         never again the r11 failure mode where one overflowing
-         record silently disabled the whole gate."""
+    """Gate baseline: ``baseline_path`` when given, else the
+    highest-round BENCH_r*.json that parses (a record with parsed:null
+    falls back to the next round down). None if nothing is usable."""
     if baseline_path:
         return _load_record(baseline_path)
-    driver_rec, driver_rnd = None, -1
     rounds = []
     for path in glob.glob(os.path.join(ROOT, "BENCH_r*.json")):
         m = re.search(r"_r(\d+)\.json$", os.path.basename(path))
         if m:
             rounds.append((int(m.group(1)), path))
-    for rnd, path in sorted(rounds, reverse=True):
-        driver_rec = _load_record(path)
-        if driver_rec is not None:
-            driver_rnd = rnd
-            break
-    tracked_path = os.path.join(ROOT, "BENCH_BASELINE.json")
-    if os.path.exists(tracked_path):
-        tracked = _load_record(tracked_path)
-        if tracked is not None:
-            try:
-                tracked_rnd = int(json.loads(open(tracked_path).read())
-                                  .get("round", -1))
-            except (OSError, ValueError, TypeError):
-                tracked_rnd = -1
-            if tracked_rnd >= driver_rnd:
-                return tracked
-    return driver_rec
+    for _, path in sorted(rounds, reverse=True):
+        rec = _load_record(path)
+        if rec is not None:
+            return rec
+    return None
+
+
+def not_comparable(prev: dict, cur: dict) -> str | None:
+    """Why the baseline and the current run cannot be compared, or
+    None. Times move with the scale factor and with the core count;
+    no drift probe divides either out (4 vs 32 cores read 3.6x on
+    islands_flagship with unchanged code), so the gate compares only
+    like with like and prints both values otherwise."""
+    if prev["sf"] != cur.get("sf"):
+        return (f"not comparable: sf={prev['sf']} vs sf={cur.get('sf')}"
+                f" — baseline {prev['file']} vs this run")
+    if prev["cpus"] != cur.get("cpus"):
+        return (f"not comparable: {prev['cpus']} vs {cur.get('cpus')} "
+                f"cores — baseline {prev['file']} vs this run; record "
+                f"a baseline at this core count and pass --baseline=PATH")
+    return None
 
 
 def bench_regressions(current: dict[str, float],
                       previous: dict[str, float],
                       prev_spread: dict[str, list[float]] | None = None,
-                      drift_factor: float = 1.0,
-                      class_factors: dict[str, float] | None = None,
-                      query_class: dict[str, str] | None = None,
-                      local_factors: dict[str, float] | None = None,
-                      corrected: dict[str, float] | None = None
-                      ) -> list[str]:
-    """Human-readable violation list: queries >=BENCH_GATE_FLOOR_SEC
-    that drifted more than BENCH_DRIFT_TOLERANCE past last round AND
-    past the previous record's own run-to-run spread (when recorded) —
-    a "regression" still inside last round's observed max is weather,
-    not a plan change (r9 verdict item 4: the only flagged drifts in
-    two rounds were sub-0.3 s noise on code-untouched queries).
+                      drift_factor: float = 1.0) -> list[str]:
+    """Human-readable violation list: queries that drifted more than
+    BENCH_DRIFT_TOLERANCE past last round AND past the previous
+    record's own run-to-run spread (when recorded) — a "regression"
+    still inside last round's observed max is weather, not a plan
+    change (r9 verdict item 4).
 
     ``drift_factor`` = baseline machine_drift / current machine_drift:
-    both records carry constant-shape calibration probes, so the two
-    runs are compared in idle-machine-equivalent seconds (now *
-    factor vs then) — the same drift adjustment the r8/r9 judges
-    applied by hand before calling anything a regression. Since r11
-    the records carry one probe PER RESOURCE CLASS (cpu/scan/shuffle):
-    ``class_factors`` maps class -> baseline/current probe-drift
-    ratio and ``query_class`` assigns each query its class, so a
-    scan-contended box no longer reads as a regression on scan-class
-    queries while the cpu probe sits idle-looking (the r10 residual).
-    Per-query slot-noise correction (r11, refined twice by busy-box
-    validation): ``corrected`` carries, per query, the min over the
-    current record's SAMPLE-PAIRED (sample_sec, probe_sec) pairs of
-    sample * excuse, where excuse = clamp(prev_min_probe / probe_i)
-    capped at 1.0 — every sample is divided by the contention index
-    of ITS OWN instant, so a burst covering the whole sample window
-    is excused (v1: one probe after all samples — the burst was gone
-    by probe time, 3/21 false flags), while a probe-only burst cannot
-    manufacture a regression because excuse never exceeds 1 (v1 also
-    inflated a +4% raw into +28% via a noisy >1 factor).
-    ``local_factors`` is the coarser fallback for records with a
-    single local cal and no pairs. The corrected path composes
-    SIGN-AWARE relative to the class factor (r12 advice): when
-    base <= 1 (box at least as contended as the baseline's),
-    effective factor = min(base, excuse) — never the product, which
-    would double-count contention the paired probes and the
-    end-of-run class probes both witnessed (r11 advice: the product
-    can reach 0.25 and mask a real ~30% regression); when base > 1
-    (box FASTER than the baseline's recording conditions) the two
-    signals have opposite signs and compose multiplicatively — base
-    tightens into idle-equivalent seconds while excuse still
-    forgives per-instant bursts, so a quiet box cannot mask a real
-    regression. The local path stays min-composed (factor =
-    min(base, clamp(local))): unlike excuse, local is a full
-    per-query measurement that can exceed 1 and carries its own
-    tighten with per-query precedence — local at parity (1.0)
-    correctly overrides a class-level tighten.
-
-    Each factor is clamped to [0.5, 2.0] so a corrupt calibration can
-    neither nuke nor disable the gate; the single-probe factor is the
-    fallback for unclassified queries or pre-r11 baselines."""
+    both records carry the constant-shape cpu calibration probe, so
+    the two runs are compared in idle-machine-equivalent seconds (now
+    * factor vs then). It is clamped to [0.5, 2.0] so a corrupt
+    calibration can neither nuke nor disable the gate."""
     out = []
     prev_spread = prev_spread or {}
-    class_factors = class_factors or {}
-    query_class = query_class or {}
-    local_factors = local_factors or {}
-    corrected = corrected or {}
-    global_factor = min(2.0, max(0.5, drift_factor or 1.0))
+    factor = min(2.0, max(0.5, drift_factor or 1.0))
     for name, now_raw in sorted(current.items()):
         then = previous.get(name)
         if then is None:
             continue
-        base = class_factors.get(query_class.get(name), global_factor)
-        base = min(2.0, max(0.5, base or 1.0))
-        if name in corrected and now_raw > 0:
-            # compose the sample-paired excuse with base by SIGN:
-            # excuse <= 1 by construction (per-sample factors capped
-            # at 1.0), so it only ever loosens. When base <= 1 the
-            # class probes witnessed the same contention the paired
-            # probes did — min(base, excuse) applies the stronger
-            # single excusal and never double-counts (0.8 * 0.8 =
-            # 0.64 would mask a real ~30% regression, r11 advice).
-            # When base > 1 the box is FASTER than the baseline's
-            # recording conditions — an opposite-sign signal the
-            # paired probes cannot carry (their cap is 1.0) — so
-            # multiply: base scales into idle-equivalent seconds
-            # (tightening, like the local-factor path's factor=base
-            # when clamp(local) >= base) and excuse separately
-            # forgives per-instant bursts (r12 advice: min alone let
-            # a quiet box mask a real regression).
-            excuse = corrected[name] / now_raw      # <= 1 by build
-            factor = min(base, excuse) if base <= 1.0 else base * excuse
-            factor = min(2.0, max(0.5, factor))
-            now = now_raw * factor
-        else:
-            local = local_factors.get(name)
-            if local:
-                # unlike the corrected path's excuse, local is a FULL
-                # per-query measurement (prev_cal / current_cal, can
-                # exceed 1), so it carries its own tighten signal and
-                # takes per-query precedence (r11 doctrine); min with
-                # base only caps a tighten at the class-level reading
-                # — no sign-aware multiply needed here
-                factor = base * min(1.0, max(0.5, local) / base)
-                factor = min(2.0, max(0.5, factor))
-            else:
-                factor = base
-            now = now_raw * factor
+        now = now_raw * factor
         # noise-floor exemption only when BOTH sides are sub-floor —
         # a 0.4s query blowing up to 30s must still trip the gate
         if then < BENCH_GATE_FLOOR_SEC and now < BENCH_GATE_FLOOR_SEC:
@@ -314,29 +175,6 @@ def bench_regressions(current: dict[str, float],
         out.append(f"{name}: {then:.3f}s -> {now_raw:.3f}s "
                    f"(drift-adj {now:.3f}s, "
                    f"+{(now / then - 1) * 100:.0f}%)")
-    return out
-
-
-def corrected_minima(samples: dict[str, list],
-                     prev_local_cal: dict[str, float]
-                     ) -> dict[str, float]:
-    """Sample-paired corrected min per query (r11+ queries_samples):
-    each sample excused by its own instant's probe vs the baseline's
-    quiet local cal, capped at 1.0 so a probe-only burst can never
-    amplify. A record whose paired probe values are all 0/falsy
-    (malformed or hand-edited) degrades to the coarser factors for
-    that query instead of crashing the whole check on min() of an
-    empty generator (r11 advice)."""
-    out = {}
-    for name, pairs in samples.items():
-        pc = prev_local_cal.get(name)
-        if not pc or not pairs:
-            continue
-        valid = [(s, p) for s, p in pairs if p]
-        if not valid:
-            continue
-        out[name] = min(
-            s * min(1.0, max(0.5, pc / p)) for s, p in valid)
     return out
 
 
@@ -458,60 +296,25 @@ def main() -> None:
 
     print("[4/6] bench regression gate ...")
     prev = latest_recorded_bench(baseline_path)
-    if prev and prev.get("reconstructed"):
-        prev["file"] += " (tail-reconstructed)"
     cur = merged_bench_record(bench_lines)
     if not gate_enabled:
         print("  (disabled via --no-bench-gate)")
     elif not bench_lines:
         print("  (skipped: no bench output)")
     elif prev is None:
-        print("  (skipped: no recorded BENCH_r*.json / "
-              "BENCH_BASELINE.json baseline)")
-    elif prev["sf"] != cur.get("sf"):
-        print(f"  (skipped: baseline {prev['file']} recorded at "
-              f"sf={prev['sf']}, this run at sf={cur.get('sf')} — "
-              f"times are not comparable)")
+        print("  (skipped: no recorded BENCH_r*.json baseline)")
+    elif mismatch := not_comparable(prev, cur):
+        print(f"  ({mismatch})")
     else:
-        cur_q = cur.get("queries", {})
         factor = ((prev["drift"] / cur.get("machine_drift"))
                   if prev["drift"] and cur.get("machine_drift") else 1.0)
-        # per-class probe ratios (both records need the r11+ fields);
-        # the current record's class map assigns queries to classes
-        cur_drifts = cur.get("machine_drifts", {})
-        class_factors = {
-            cls: prev["drifts"][cls] / cur_drifts[cls]
-            for cls in prev["drifts"]
-            if cur_drifts.get(cls)}
-        # per-query temporally-local factors (both records need the
-        # r11+ queries_local_cal field)
-        cur_local = cur.get("queries_local_cal", {})
-        local_factors = {
-            name: prev["local_cal"][name] / cur_local[name]
-            for name in prev["local_cal"]
-            if cur_local.get(name)}
-        # sample-paired corrected min (r11+ queries_samples): each
-        # sample excused by its own instant's probe, never amplified
-        corrected = corrected_minima(cur.get("queries_samples", {}),
-                                     prev["local_cal"])
-        if class_factors:
-            print("  per-class drift factors: "
-                  + ", ".join(f"{c}={f:.3f}"
-                              for c, f in sorted(class_factors.items())))
-        if local_factors:
-            lo, hi = min(local_factors.values()), max(local_factors.values())
-            print(f"  per-query local factors: n={len(local_factors)} "
-                  f"range [{lo:.3f}, {hi:.3f}]")
-        if not class_factors and not local_factors and factor != 1.0:
-            print(f"  drift adjustment (single-probe): baseline "
-                  f"{prev['drift']} / current {cur.get('machine_drift')} "
-                  f"-> factor {factor:.3f}")
-        if corrected:
-            print(f"  sample-paired corrected minima: n={len(corrected)}")
+        if factor != 1.0:
+            print(f"  drift adjustment: baseline {prev['drift']} / "
+                  f"current {cur.get('machine_drift')} -> factor "
+                  f"{factor:.3f}")
         violations = bench_regressions(
-            cur_q, prev["queries"], prev["spread"], factor,
-            class_factors, cur.get("query_class", {}), local_factors,
-            corrected)
+            cur.get("queries", {}), prev["queries"], prev["spread"],
+            factor)
         if violations:
             print(f"  REGRESSIONS vs {prev['file']} "
                   f"(> {BENCH_DRIFT_TOLERANCE:.0%} on >= "
@@ -530,15 +333,15 @@ def main() -> None:
         print("RELEASE CHECK (bench-only) PASSED")
         return
 
-    print("[5/6] scan gate (compiled ceilings + runtime reuse) ...")
+    print("[5/6] work gate + scan gate (tools/scan_audit.py --gate) ...")
     g = subprocess.run(
         [sys.executable, os.path.join(ROOT, "tools/scan_audit.py"),
          "--gate", sf_dir], env=env, capture_output=True, text=True)
     glines = [ln for ln in g.stdout.replace("\r", "\n").splitlines()
-              if "VIOLATION" in ln or "scan gate" in ln or "note:" in ln]
-    print("\n".join(glines[-12:]) if glines else "(no scan-gate output)")
+              if "VIOLATION" in ln or " gate: " in ln or "note:" in ln]
+    print("\n".join(glines[-12:]) if glines else "(no gate output)")
     if g.returncode != 0:
-        failures.append("scan gate")
+        failures.append("scan/work gate")
 
     # fuzz at the smallest scale SIBLING of sf_dir (r10 advice: a
     # custom data dir must not silently fuzz the stock path) — falls

@@ -75,7 +75,8 @@ def get_spark(app_name: str = "transcript-analysis-spark",
         # query the r13 A/B cited (pagerank, ngram, mllib_lsh, bloom,
         # corpus_release_prep, training_data_prep) contain ZERO
         # ShuffledHashJoin and are node-for-node identical with and
-        # without the confs (plans/r14/*), and a null A/B (identical
+        # without the confs (plans/r14/* as of commit a8fd919, in git
+        # history), and a null A/B (identical
         # builders in both arms) reproduced the r13 "wins" as a
         # first-position harness artifact (tools/ab_bench.py r14
         # note). Defaults also remove the documented risk of a

@@ -46,7 +46,8 @@ def _ensure_session_confs(spark: SparkSession) -> None:
     The r13 join-strategy confs that used to live here (set-once
     preferSortMergeJoin=false + AQE SHJ threshold) were removed in
     r14: AQE final plans proved them inert (zero ShuffledHashJoin,
-    node-identical plans either way — see session.py and plans/r14/),
+    node-identical plans either way — see session.py and plans/r14/
+    as of commit a8fd919, in git history),
     and with them went the set-once guard.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
