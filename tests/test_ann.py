@@ -1,47 +1,107 @@
-"""MLlib LSH ANN operators (X15): recall against brute force."""
+"""Similarity search (X15): the exact tiled similarity self-join's
+kernel against a brute-force pair list, and the IVF/PQ indexes'
+recall against brute force."""
 
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import functions as F
+import numpy as np
+import pyarrow as pa
+import pytest
 
-from transcript_analysis_spark.operators.ann import (
-    approx_nearest_neighbors, approx_similarity_pairs)
+from transcript_analysis_spark.plans import data_pipeline
+from transcript_analysis_spark.plans.data_pipeline import (
+    PAIR_THRESHOLD, _tile_pair_batches, tile_pairs)
 
 SF_DIR = "/root/testdata/sf0.001"
 
+# Crafted tiles of (vec_id, vector). Tile 1 holds ids smaller than
+# tile 0's, so its pairs with tile 0 have the smaller id in the later
+# tile; 20 and 21 are exact duplicates; tile 2 has one vector. The
+# vectors 31 and 32 differ from 30 in the first dimension only, by the
+# float32 values either side of the threshold (31 just inside, 32 just
+# outside); the other dimensions make the Gram form round.
+_BASE = [0.0, 0.3, 0.7, 0.1]
+_OUT = np.float32(PAIR_THRESHOLD)
+_IN = np.nextafter(_OUT, np.float32(0.0))
+TILES = {
+    0: [(10, [0.5, 0.5, 0.5, 0.5]), (11, [0.6, 0.4, 0.5, 0.5]),
+        (20, [0.2, -0.1, 0.3, 0.9]), (21, [0.2, -0.1, 0.3, 0.9]),
+        (30, _BASE)],
+    1: [(1, [0.5, 0.5, 0.4, 0.6]), (2, [-0.9, 0.1, 0.0, 0.2]),
+        (3, [0.1, 0.2, 0.3, 0.4]),
+        (31, [float(_IN)] + _BASE[1:]), (32, [float(_OUT)] + _BASE[1:])],
+    2: [(5, [0.55, 0.45, 0.5, 0.5])],
+}
 
-def test_ann_topk_recall_vs_brute_force(spark):
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    rows = emb.collect()
-    q = [float(x) for x in rows[0].embedding]
 
-    def dist(v):
-        return math.sqrt(sum((float(a) - b) ** 2 for a, b in zip(v, q)))
-
-    brute = sorted(rows, key=lambda r: dist(r.embedding))[:10]
-    brute_ids = {r.vec_id for r in brute}
-    got = approx_nearest_neighbors(emb, q, k=10, bucket_length=4.0,
-                                   num_tables=5)
-    got_ids = {r.vec_id for r in got.collect()}
-    # approximate: demand decent recall, not exactness
-    assert len(got_ids & brute_ids) >= 6, (got_ids, brute_ids)
+def _dist(u, v):
+    """Left-to-right sum of squared differences, as the oracle's fold."""
+    return math.sqrt(sum((x - y) * (x - y) for x, y in zip(u, v)))
 
 
-def test_ann_pairs_subset_of_true_pairs(spark):
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").limit(200)
-    pairs = approx_similarity_pairs(emb, threshold=3.5, bucket_length=4.0,
-                                    num_tables=5)
-    got = pairs.collect()
-    assert got, "LSH join found no pairs at this threshold"
-    # every reported distance must be genuine (verify a sample exactly)
-    vecs = {r.vec_id: [float(x) for x in r.embedding] for r in emb.collect()}
-    for r in got[:20]:
-        d = math.sqrt(sum((a - b) ** 2 for a, b in
-                          zip(vecs[r.vec_a], vecs[r.vec_b])))
-        assert abs(d - r.euclidean_dist) < 1e-4
-        assert d <= 3.5 + 1e-9
+def _brute_force(tiles):
+    vecs = sorted(r for rows in tiles.values() for r in rows)
+    return {(a, b): _dist(u, v)
+            for i, (a, u) in enumerate(vecs) for b, v in vecs[i + 1:]
+            if _dist(u, v) <= PAIR_THRESHOLD}
+
+
+def _tile_pair_input(tiles):
+    """The join's output as mapInArrow sees it: one row per tile pair
+    ``ta <= tb``, split over two batches so the second's list arrays
+    are sliced at an offset."""
+    t = pa.struct([("vec_id", pa.int64()),
+                   ("embedding", pa.list_(pa.float32()))])
+    col = [[{"vec_id": i, "embedding": v} for i, v in rows]
+           for rows in tiles.values()]
+    ids = list(tiles)
+    rows = [(x, y) for x in range(len(ids)) for y in range(len(ids))
+            if ids[x] <= ids[y]]
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array([ids[x] for x, _ in rows], pa.int32()),
+         pa.array([col[x] for x, _ in rows], pa.list_(t)),
+         pa.array([ids[y] for _, y in rows], pa.int32()),
+         pa.array([col[y] for _, y in rows], pa.list_(t))],
+        ["ta", "va", "tb", "vb"])
+    return [batch.slice(0, 2), batch.slice(2)]
+
+
+@pytest.mark.parametrize("chunk", [1024, 2])
+def test_tile_kernel_finds_every_pair_once(monkeypatch, chunk):
+    """The kernel, fed crafted tiles through its mapInArrow body, returns
+    exactly the brute-force pair set of the float32 vectors, each pair
+    once as (smaller id, larger id), with the same distance bits. A
+    chunk of 2 rows splits every tile into diagonal and off-diagonal
+    chunk pairs."""
+    monkeypatch.setattr(data_pipeline, "PAIR_CHUNK", chunk)
+    tiles = {t: [(i, [float(x) for x in np.float32(v)]) for i, v in rows]
+             for t, rows in TILES.items()}
+    got = [(a, b, d) for rb in _tile_pair_batches(_tile_pair_input(tiles))
+           for a, b, d in zip(*(rb.column(c).to_pylist()
+                                for c in ("vec_a", "vec_b", "dist")))]
+    want = _brute_force(tiles)
+    assert len(got) == len({(a, b) for a, b, _ in got}), "a pair twice"
+    assert {(a, b): d for a, b, d in got} == want
+    # the crafted cases are present, and the boundary is where it should be
+    assert _IN < PAIR_THRESHOLD < _OUT
+    assert want[(20, 21)] == 0.0
+    assert (1, 10) in want and (5, 10) in want and (30, 31) in want
+    assert want[(30, 31)] == _IN and (30, 32) not in want
+
+
+def test_tile_kernel_margin_keeps_pairs_the_gram_form_rounds_out():
+    """Two vectors exactly PAIR_THRESHOLD apart whose Gram-form squared
+    distance rounds above the threshold's square: the prefilter's margin
+    must keep the pair for the exact check."""
+    v = np.array([[0.0, 0.87, 0.63, -0.99],
+                  [PAIR_THRESHOLD, 0.87, 0.63, -0.99]])
+    sq = np.einsum("ij,ij->i", v, v)
+    assert sq[0] + sq[1] - 2.0 * (v[0] @ v[1]) > PAIR_THRESHOLD ** 2
+    ids = np.array([7, 4])
+    got = [x.tolist() for x in next(tile_pairs(ids, v, ids, v, True))]
+    assert got == [[4], [7], [PAIR_THRESHOLD]]
 
 
 def test_ivf_probe_recall_vs_brute_force(spark):
@@ -116,24 +176,6 @@ def test_ann_recall_report_floors_at_bench_scale(spark):
         assert r.recall_at_k == r.n_hits / 10
     assert rows[f"ivf_nprobe{IVF_NPROBE}"].recall_at_k >= 0.4
     assert rows["pq_adc_rerank"].recall_at_k >= 0.9
-
-
-def test_mllib_lsh_recall_floor_vs_brute_force(spark):
-    """The MLlib LSH variant cannot join the oracle-checked report
-    (seeded JVM RNG is not SQL-reproducible), so its recall evidence
-    lives here, against the same brute-force ground truth."""
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    rows = emb.collect()
-    q = [float(x) for x in next(r for r in rows if r.vec_id == 0).embedding]
-    brute = sorted((r for r in rows if r.vec_id != 0),
-                   key=lambda r: (math.sqrt(sum(
-                       (float(a) - b) ** 2
-                       for a, b in zip(r.embedding, q))), r.vec_id))[:10]
-    got = approx_nearest_neighbors(emb.filter(F.col("vec_id") != 0), q,
-                                   k=10, bucket_length=4.0, num_tables=5)
-    recall = len({r.vec_id for r in got.collect()}
-                 & {r.vec_id for r in brute}) / 10
-    assert recall >= 0.6, f"MLlib LSH recall collapsed: {recall}"
 
 
 def test_promoted_pq_config_clears_recall_floor(spark):

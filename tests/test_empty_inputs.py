@@ -4,8 +4,9 @@ At 100 TB, empty inputs are not an edge case — a partition filter, a
 fresh ingest, or a quarantine split routinely hands an operator zero
 rows, and a plan that crashes there takes the whole job with it.
 Found-by-this-gate: kmeans/_lloyd built an untypeable zero-length
-literal centroid array, and MLlib's LSH fit() raises outright on an
-empty dataset — both now short-circuit to their contract schemas."""
+literal centroid array, which now short-circuits to its contract
+schema. The exact similarity self-join needs no such guard: an empty
+table gives no tiles, so its kernel never runs."""
 
 from __future__ import annotations
 

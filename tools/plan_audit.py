@@ -32,7 +32,8 @@ def audit(plan: str) -> list[str]:
     if "BroadcastNestedLoopJoin" in plan:
         notes.append("broadcast nested-loop (bounded dim, intentional)")
     if "ArrowEvalPython" in plan or "BatchEvalPython" in plan \
-            or "FlatMapGroupsInPandas" in plan or "MapInPandas" in plan:
+            or "FlatMapGroupsInPandas" in plan or "MapInPandas" in plan \
+            or "MapInArrow" in plan:
         notes.append("pandas/Arrow stage (declared UDF operator)")
     else:
         notes.append("fully JVM-side")

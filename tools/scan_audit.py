@@ -99,11 +99,10 @@ WORK_COUNTERS = ("jobs", "stages", "tasks", "shuffle_write_records",
                  "rows.HashAggregate", "rows.Join", "rows.Scan")
 # Relative slack of the two counters that move with unchanged code.
 # Compressed shuffle bytes follow the row order inside each map output
-# (seen: +0.2% on corpus_release_prep, +-11 bytes on
-# mllib_lsh_similar_pairs), and partial aggregates emit a row per key
-# per partition, so their output follows which partition each row
-# lands in (seen: pagerank_purchase_graph 121,038 or 124,238 rows,
-# 2.6%, across runs in one JVM). Every other counter is exact.
+# (seen: +0.2% on corpus_release_prep), and partial aggregates emit a
+# row per key per partition, so their output follows which partition
+# each row lands in (seen: pagerank_purchase_graph 121,038 or 124,238
+# rows, 2.6%, across runs in one JVM). Every other counter is exact.
 WORK_SLACK = {"shuffle_write_bytes": 0.01, "rows.HashAggregate": 0.05}
 
 # Queries whose compiled count can reach the runtime-check threshold
