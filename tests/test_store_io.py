@@ -1,6 +1,7 @@
-"""Shared store-write discipline: the size-aware partition policy and
-the per-write dynamic-overwrite contract (r8 verdict item 1 — no more
-hard-coded coalesce(1) single-task funnels for unbounded stores)."""
+"""Shared store-write discipline: the size-aware partition policy, the
+per-write dynamic-overwrite contract (r8 verdict item 1 — no more
+hard-coded coalesce(1) single-task funnels for unbounded stores) and
+the typed store reads."""
 
 import os
 
@@ -60,20 +61,138 @@ def test_write_batch_partition_dynamic_overwrite_no_session_mutation(
                           "static") == before
 
 
+def _data_files(out, batch_id):
+    part = os.path.join(out, f"batch_id={batch_id}")
+    return [f for f in os.listdir(part) if f.endswith(".parquet")]
+
+
 def test_write_batch_partition_small_batch_lands_one_file(spark, tmp_path):
     out = str(tmp_path / "store")
     df = spark.range(100).select(F.col("id").alias("doc_id"))
     # many input partitions, tiny payload -> the size policy collapses
     # the write to a single file
     write_batch_partition(df.repartition(16), 7, out, size_aware=True)
-    part = os.path.join(out, "batch_id=7")
-    files = [f for f in os.listdir(part) if f.endswith(".parquet")]
-    assert len(files) == 1
+    assert len(_data_files(out, 7)) == 1
+
+
+def test_size_aware_write_fans_out_from_measured_bytes(spark, tmp_path):
+    """The REBALANCE hint lets adaptive execution cut the write into
+    files from the shuffle bytes it measured: with a 1 MB advisory
+    size, a multi-MB batch lands several files while a 100-row batch
+    still lands exactly one — no single-task funnel, no tiny-file
+    spray, and no count or checkpoint before the write."""
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    before = spark.conf.get(key)
+    spark.conf.set(key, str(1 << 20))
+    try:
+        big = spark.range(0, 200_000, numPartitions=8).select(
+            F.col("id").alias("doc_id"),
+            F.sha2(F.col("id").cast("string"), 256).alias("text"))
+        write_batch_partition(big, 0, str(tmp_path / "big"),
+                              size_aware=True)
+        small = spark.range(0, 100, numPartitions=8).select(
+            F.col("id").alias("doc_id"))
+        write_batch_partition(small, 0, str(tmp_path / "small"),
+                              size_aware=True)
+    finally:
+        spark.conf.set(key, before)
+    assert len(_data_files(str(tmp_path / "big"), 0)) > 1
+    assert len(_data_files(str(tmp_path / "small"), 0)) == 1
+    assert spark.read.parquet(str(tmp_path / "big")).count() == 200_000
+
+
+def _capture_errors(spark):
+    """Attach a log4j appender that records the JVM's ERROR lines;
+    returns (read, detach)."""
+    jvm = spark.sparkContext._jvm
+    log4j = jvm.org.apache.logging.log4j
+    ctx = log4j.LogManager.getContext(False)
+    root = ctx.getConfiguration().getRootLogger()
+    writer = jvm.java.io.StringWriter()
+    appender = log4j.core.appender.WriterAppender.createAppender(
+        log4j.core.layout.PatternLayout.createDefaultLayout(), None,
+        writer, "store-read-errors", False, True)
+    appender.start()
+    root.addAppender(appender, log4j.Level.ERROR, None)
+    ctx.updateLoggers()
+
+    def read():
+        # listener-bus errors are logged asynchronously
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        return str(writer.toString())
+
+    def detach():
+        root.removeAppender("store-read-errors")
+        ctx.updateLoggers()
+    return read, detach
+
+
+def test_typed_reads_of_empty_stores_run_no_job_and_log_no_error(
+        spark, tmp_path):
+    """An absent store, and one holding only partition markers, read
+    as an empty frame of the declared schema — without a
+    schema-inference job and without the ERROR line a failed bare read
+    logs once the session has used DataFrame.observe."""
+    from pyspark.sql import Observation
+
+    from transcript_analysis_spark.streaming.pipeline import (
+        read_tombstones)
+    from transcript_analysis_spark.streaming.neardup import read_pairs
+    from transcript_analysis_spark.streaming.store_io import read_store
+
+    obs = Observation()
+    spark.range(3).observe(obs, F.count(F.lit(1)).alias("n")).collect()
+    assert obs.get["n"] == 3
+    markers = tmp_path / "markers"
+    (markers / "batch_id=0").mkdir(parents=True)
+    (markers / "_SUCCESS").write_text("")
+    sc = spark.sparkContext
+    read_errors, detach = _capture_errors(spark)
+    try:
+        sc.setJobGroup("typed-empty-reads", "typed empty store reads")
+        frames = [read_store(spark, str(d), "doc_id long, batch_id long")
+                  for d in (tmp_path / "absent", markers)]
+        frames += [read_pairs(spark, str(tmp_path / "absent"), dedup=False),
+                   read_tombstones(spark, str(markers))]
+        rows = [f.collect() for f in frames]
+        jobs = sc.statusTracker().getJobIdsForGroup("typed-empty-reads")
+        errors = read_errors()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        detach()
+    assert rows == [[], [], [], []]
+    assert [f.schema.simpleString() for f in frames] == [
+        "struct<doc_id:bigint,batch_id:bigint>"] * 2 + [
+        "struct<doc_a:bigint,doc_b:bigint,batch_id:bigint>",
+        "struct<doc_id:bigint,batch_id:bigint>"]
+    assert list(jobs) == []
+    assert "ERROR" not in errors and "Exception" not in errors, errors
+
+
+def test_typed_read_of_a_written_store_runs_no_inference_job(
+        spark, tmp_path):
+    """A written store reads with its declared types — the partition
+    column too — and building the frame runs no Spark job."""
+    from transcript_analysis_spark.streaming.store_io import read_store
+
+    out = str(tmp_path / "store")
+    write_batch_partition(spark.range(4).select(
+        F.col("id").alias("doc_id")), 3, out, size_aware=True)
+    sc = spark.sparkContext
+    sc.setJobGroup("typed-read", "typed store read")
+    try:
+        df = read_store(spark, out, "doc_id long, batch_id long")
+        jobs = sc.statusTracker().getJobIdsForGroup("typed-read")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(jobs) == []
+    assert df.schema.simpleString() == "struct<doc_id:bigint,batch_id:bigint>"
+    assert sorted(map(tuple, df.collect())) == [(i, 3) for i in range(4)]
 
 
 def test_observed_row_bytes_measures_footers(spark, tmp_path):
-    """Calibration probe = ceil(partition file bytes / footer rows),
-    the same metadata-only walk describe_tables uses."""
+    """Compaction's width probe = ceil(partition file bytes / footer
+    rows), the same metadata-only walk describe_tables uses."""
     from transcript_analysis_spark.streaming import store_io
 
     out = str(tmp_path / "store")
@@ -93,7 +212,7 @@ def test_observed_row_bytes_measures_footers(spark, tmp_path):
 
 def test_observed_row_bytes_accepts_filesystem_uris(spark, tmp_path):
     """r10 verdict item 6: the partition walk goes through the
-    pyarrow filesystem resolved FROM THE STORE URI, so calibration
+    pyarrow filesystem resolved FROM THE STORE URI, so the measurement
     extends beyond bare local paths — proven here with a file:// URI
     (the resolution mechanism is identical for s3a/abfs; only the
     resolved filesystem differs)."""
@@ -114,65 +233,6 @@ def test_observed_row_bytes_accepts_filesystem_uris(spark, tmp_path):
     # never an exception
     assert store_io.observed_row_bytes("definitely-not-a-scheme://x") \
         is None
-
-
-def test_second_batch_sizes_from_measured_width(spark, tmp_path,
-                                                monkeypatch):
-    """Batch 0 sizes from the caller's (deliberately absurd) estimate;
-    batch 1 must size from the bytes/row actually measured off batch
-    0's footers — the r9 verdict calibration item."""
-    from transcript_analysis_spark.streaming import store_io
-
-    out = str(tmp_path / "store")
-    widths = []
-    real = store_io.partitions_for
-
-    def spy(rows, avg_row_bytes=store_io.DEFAULT_ROW_BYTES,
-            target_bytes=store_io.TARGET_PARTITION_BYTES):
-        widths.append(avg_row_bytes)
-        return real(rows, avg_row_bytes, target_bytes)
-
-    monkeypatch.setattr(store_io, "partitions_for", spy)
-    store_io._CALIBRATION.pop(out, None)
-    df = spark.range(50).select(
-        F.col("id").alias("doc_id"),
-        F.lpad(F.lit("x"), 200, "y").alias("text"))
-    store_io.write_batch_partition(df, 0, out, size_aware=True,
-                                   avg_row_bytes=1)
-    store_io.write_batch_partition(df, 1, out, size_aware=True,
-                                   avg_row_bytes=1)
-    assert widths[0] == 1                     # cold: the guess
-    measured = store_io.observed_row_bytes(out, batch_id=0)
-    assert widths[1] == measured and measured > 1   # warm: reality
-
-
-def test_restarted_process_calibrates_from_disk(spark, tmp_path,
-                                                monkeypatch):
-    """With the in-process cache cleared (a restart), the first write
-    probes the latest on-disk partition instead of trusting the
-    constant."""
-    from transcript_analysis_spark.streaming import store_io
-
-    out = str(tmp_path / "store")
-    df = spark.range(50).select(
-        F.col("id").alias("doc_id"),
-        F.lpad(F.lit("x"), 200, "y").alias("text"))
-    store_io.write_batch_partition(df, 0, out, size_aware=True)
-    measured = store_io.observed_row_bytes(out, batch_id=0)
-    store_io._CALIBRATION.pop(out, None)      # simulate restart
-
-    widths = []
-    real = store_io.partitions_for
-
-    def spy(rows, avg_row_bytes=store_io.DEFAULT_ROW_BYTES,
-            target_bytes=store_io.TARGET_PARTITION_BYTES):
-        widths.append(avg_row_bytes)
-        return real(rows, avg_row_bytes, target_bytes)
-
-    monkeypatch.setattr(store_io, "partitions_for", spy)
-    store_io.write_batch_partition(df, 1, out, size_aware=True,
-                                   avg_row_bytes=1)
-    assert widths == [measured]
 
 
 def test_observed_row_bytes_sums_multi_file_partitions(spark, tmp_path):
@@ -199,10 +259,10 @@ def test_observed_row_bytes_sums_multi_file_partitions(spark, tmp_path):
 def test_normalize_store_uri_rewrites_hadoop_s3_aliases():
     """r11 advice item 2: pyarrow's FileSystem.from_uri raises
     ArrowInvalid for Spark's Hadoop S3 schemes (s3a://, s3n://) — the
-    exact schemes Spark jobs write stores with — so the calibration
-    walk must rewrite them to the s3:// scheme pyarrow implements.
-    Without the rewrite, remote-store calibration silently fell back
-    to the constant estimate."""
+    exact schemes Spark jobs write stores with — so the footer walk
+    (`observed_row_bytes`) must rewrite them to the s3:// scheme
+    pyarrow implements. Without the rewrite, remote-store compaction
+    silently fell back to the constant estimate."""
     import pyarrow as pa
     import pytest
     from pyarrow import fs as pafs

@@ -363,11 +363,11 @@ def test_stream_stream_outer_join_flushes_unmatched_at_watermark(
         "expected at least one unmatched (NULL-click) purchase"
 
 
-def test_foreach_batch_enrich_sizes_estimate_from_dim_width(
+def test_foreach_batch_enrich_writes_size_aware(
         spark, tmp_path, monkeypatch):
-    """The cold (batch-0) row-width estimate grows with the joined dim
-    schema — the r9 advice item: enriched rows carry the event PLUS
-    the dim columns, so the bare store default undershoots."""
+    """Enriched rows carry the event PLUS the dim columns (the r9
+    advice item), so the write goes through the size-aware policy,
+    which sizes files from the measured bytes, not a width guess."""
     from transcript_analysis_spark.streaming import store_io, windows
 
     dim_dir = str(tmp_path / "dim")
@@ -392,6 +392,7 @@ def test_foreach_batch_enrich_sizes_estimate_from_dim_width(
                                "event_id long, user_id long")
     windows.foreach_batch_enrich(b0, 0, dim_dir,
                                  str(tmp_path / "out"))
-    # 4-column dim: default + 3 joined columns x 32 B
-    assert seen["avg_row_bytes"] == store_io.DEFAULT_ROW_BYTES + 96
-    assert seen["size_aware"] is True
+    assert seen == {"size_aware": True}
+    got = spark.read.parquet(str(tmp_path / "out")).collect()
+    assert [(r.event_id, r.tier, r.batch_id) for r in got] == [
+        (100, "bronze", 0)]

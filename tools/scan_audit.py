@@ -313,6 +313,14 @@ def main() -> None:
                 work = work_counters(spark)
             else:
                 work_violations = work_gate(spark)
+            # The scan session below starts in the same JVM, whose
+            # system properties still carry the work pass's event-log
+            # conf. Its log would live in log_dir, which the finally
+            # clause deletes while that session is open, and Spark's
+            # shutdown hook would then fail to finalize it.
+            from pyspark import SparkContext
+            SparkContext._jvm.java.lang.System.setProperty(
+                "spark.eventLog.enabled", "false")
         spark = get_spark("scan-audit")
         spark.sparkContext.setLogLevel("ERROR")
 

@@ -75,10 +75,12 @@ def latest_version(spark: SparkSession, root: str) -> int | None:
 
 
 def read_snapshot(spark: SparkSession, root: str,
-                  version: int | None = None) -> DataFrame:
+                  version: int | None = None,
+                  schema: str | None = None) -> DataFrame:
     """Read a committed snapshot (latest by default). The returned
     DataFrame stays valid across later commits — its files are
-    immutable until an explicit vacuum."""
+    immutable until an explicit vacuum. A table with a fixed DDL
+    `schema` passes it, which skips Spark's footer-inference job."""
     v = latest_version(spark, root) if version is None else version
     if v is None:
         raise FileNotFoundError(f"versioned table has no commits: {root}")
@@ -87,7 +89,8 @@ def read_snapshot(spark: SparkSession, root: str,
     if not versions.get(v, False):
         raise FileNotFoundError(
             f"version {v} of {root} is missing or uncommitted")
-    return spark.read.parquet(_version_dir(root, v))
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(_version_dir(root, v))
 
 
 class ConcurrentWriterError(RuntimeError):

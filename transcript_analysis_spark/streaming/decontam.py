@@ -19,7 +19,9 @@ What streaming emits per document is the bloom verdict:
 Replay contract: per-doc verdicts land in a ``batch_id=N`` partition
 via dynamic partition overwrite (same recovery shape as
 streaming/neardup.py) — a replayed micro-batch overwrites its own
-output, never duplicates it.
+output, never duplicates it. The written verdicts are pinned and
+returned, so a caller gating on them (the composed pipeline) reuses
+them instead of probing the filter a second time.
 
 Equivalence contract (tested): streamed ``(n_shingles,
 n_candidates)`` per doc equal the batch query's columns exactly — the
@@ -39,7 +41,11 @@ from transcript_analysis_spark.plans.scale_ops import (
     bloom_words,
 )
 from transcript_analysis_spark.streaming.store_io import (
-    write_batch_partition)
+    read_store, write_batch_partition)
+
+BLOOM_SCHEMA = "w long, bits long"
+VERDICT_SCHEMA = ("doc_id long, n_shingles long, n_candidates long, "
+                  "batch_id long")
 
 
 def build_bloom_store(train_docs: DataFrame, bloom_dir: str) -> int:
@@ -68,16 +74,18 @@ def probe_bloom(docs: DataFrame, bloom_store: DataFrame) -> DataFrame:
 
 
 def foreach_batch_decontam(batch_df: DataFrame, batch_id: int,
-                           bloom_dir: str, out_dir: str) -> None:
+                           bloom_dir: str, out_dir: str) -> DataFrame:
     """Probe one micro-batch of (doc_id, text) documents against the
-    persisted filter; write verdicts to this batch's partition.
-    Safe to replay with the same batch_id."""
+    persisted filter; write verdicts to this batch's partition and
+    return them, pinned (doc_id, n_shingles, n_candidates). Safe to
+    replay with the same batch_id."""
     spark = batch_df.sparkSession
-    store = spark.read.parquet(bloom_dir)
+    store = read_store(spark, bloom_dir, BLOOM_SCHEMA)
+    verdicts = probe_bloom(batch_df, store).localCheckpoint(eager=True)
     # One verdict row per doc — unbounded with batch size, so the
     # write fan-out comes from the shared size policy.
-    write_batch_partition(probe_bloom(batch_df, store), batch_id,
-                          out_dir, size_aware=True, avg_row_bytes=64)
+    write_batch_partition(verdicts, batch_id, out_dir, size_aware=True)
+    return verdicts
 
 
 def run_decontam_stream(stream_docs: DataFrame, bloom_dir: str,

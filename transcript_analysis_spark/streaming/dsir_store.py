@@ -17,7 +17,9 @@ selection campaign or the acceptance threshold drifts mid-corpus).
 
 Replay contract: per-doc scores land in a ``batch_id=N`` partition
 via dynamic partition overwrite — a replayed micro-batch overwrites
-its own output, never duplicates it.
+its own output, never duplicates it. The written scores are pinned
+and returned, so a caller gating on them (the composed pipeline)
+reuses them instead of scoring the batch a second time.
 
 Equivalence contract (tested): when the stream replays the same raw
 corpus the store was fit on, streamed (n_tokens, importance_e9,
@@ -37,7 +39,11 @@ from transcript_analysis_spark.plans.selection import (
     dsir_weight_table,
 )
 from transcript_analysis_spark.streaming.store_io import (
-    write_batch_partition)
+    read_store, write_batch_partition)
+
+WEIGHT_SCHEMA = "w string, w_e9 long"
+SCORE_SCHEMA = ("doc_id long, n_tokens long, importance_e9 long, "
+                "avg_logratio double, target_like boolean, batch_id long")
 
 
 def build_weight_store(corpus_docs: DataFrame, weights_dir: str) -> int:
@@ -58,17 +64,18 @@ def score_against_store(docs: DataFrame, weight_store: DataFrame) -> DataFrame:
 
 
 def foreach_batch_dsir(batch_df: DataFrame, batch_id: int,
-                       weights_dir: str, scores_dir: str) -> None:
+                       weights_dir: str, scores_dir: str) -> DataFrame:
     """Score one micro-batch of raw documents against the persisted
-    weights; write scores to this batch's partition. Safe to replay
-    with the same batch_id."""
+    weights; write scores to this batch's partition and return them,
+    pinned. Safe to replay with the same batch_id."""
     spark = batch_df.sparkSession
-    store = spark.read.parquet(weights_dir)
+    store = read_store(spark, weights_dir, WEIGHT_SCHEMA)
+    scores = score_against_store(batch_df, store).localCheckpoint(
+        eager=True)
     # One score row per doc — unbounded with batch size, so the
     # write fan-out comes from the shared size policy.
-    write_batch_partition(score_against_store(batch_df, store),
-                          batch_id, scores_dir, size_aware=True,
-                          avg_row_bytes=96)
+    write_batch_partition(scores, batch_id, scores_dir, size_aware=True)
+    return scores
 
 
 def run_dsir_stream(stream_docs: DataFrame, weights_dir: str,
@@ -87,4 +94,4 @@ def read_scores(spark, scores_dir: str) -> DataFrame:
     batch appears once per batch (dedupe by latest batch_id if the
     source can re-deliver across batches; within-batch replay is
     already idempotent)."""
-    return spark.read.parquet(scores_dir)
+    return read_store(spark, scores_dir, SCORE_SCHEMA)

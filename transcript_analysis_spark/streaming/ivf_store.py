@@ -38,6 +38,13 @@ from transcript_analysis_spark.plans.data_pipeline import (
     ivf_seed_centroids,
     ivf_vectors,
 )
+from transcript_analysis_spark.streaming.store_io import read_store
+
+# The corpus embeddings table the store assigns, and the store's own
+# two tables.
+EMBEDDING_SCHEMA = "vec_id long, embedding array<float>, label int"
+CENTROID_SCHEMA = "cent_id long, cv array<double>"
+ASSIGN_SCHEMA = "vec_id long, cent_id long, cos9 double, batch_id long"
 
 
 def build_centroid_store(emb: DataFrame, centroid_dir: str) -> int:
@@ -61,7 +68,7 @@ def foreach_batch_ivf(batch_df: DataFrame, batch_id: int,
     """Assign one micro-batch of (vec_id, label, embedding) rows and
     land them in a batch_id partition (replay-idempotent overwrite)."""
     spark = batch_df.sparkSession
-    cents = spark.read.parquet(centroid_dir)
+    cents = read_store(spark, centroid_dir, CENTROID_SCHEMA)
     out = (assign_against_store(batch_df, cents)
            .withColumn("batch_id", F.lit(batch_id)))
     (out.write.mode("overwrite")
@@ -71,7 +78,7 @@ def foreach_batch_ivf(batch_df: DataFrame, batch_id: int,
 
 
 def read_assignments(spark: SparkSession, assign_dir: str) -> DataFrame:
-    return spark.read.parquet(assign_dir)
+    return read_store(spark, assign_dir, ASSIGN_SCHEMA)
 
 
 def search_store(spark: SparkSession, centroid_dir: str, assign_dir: str,
@@ -84,7 +91,7 @@ def search_store(spark: SparkSession, centroid_dir: str, assign_dir: str,
     cosine) — the registered `ivf_topk_probe` contract, built from
     the same helpers."""
     v = ivf_vectors(vectors)
-    cents = spark.read.parquet(centroid_dir)
+    cents = read_store(spark, centroid_dir, CENTROID_SCHEMA)
     q = v.filter(F.col("vec_id") == 0).select(F.col("v").alias("qv"))
     top_cents = ivf_probe_centroids(cents, q, nprobe)
     bucket_ids = (read_assignments(spark, assign_dir)

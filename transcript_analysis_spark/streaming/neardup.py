@@ -26,18 +26,15 @@ set on the full corpus.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.utils import AnalysisException
 
 from transcript_analysis_spark.plans.data_pipeline import minhash_band_keys
 from transcript_analysis_spark.streaming.store_io import (
-    write_batch_partition)
+    read_store, write_batch_partition)
 
-
-def _try_read(spark, path: str) -> DataFrame | None:
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException:
-        return None   # first batch: store not created yet
+# Band rows carry their arrival batch as a DATA column (appended, not
+# partitioned); rows written before stamping existed read it as null.
+BANDS_SCHEMA = "doc_id long, band int, key string, batch_id int"
+PAIRS_SCHEMA = "doc_a long, doc_b long, batch_id long"
 
 
 def foreach_batch_neardup(batch_df: DataFrame, batch_id: int,
@@ -58,29 +55,26 @@ def foreach_batch_neardup(batch_df: DataFrame, batch_id: int,
     # collapses it), and `n.doc_id != s.doc_id` keeps a doc from
     # pairing with its own partially-appended bands.
     all_bands = minhash_band_keys(batch_df).localCheckpoint(eager=True)
-    store = _try_read(spark, bands_dir)
-    pairs = None
-    if store is not None:
-        # Probe only bands that had ARRIVED as of this batch: each
-        # appended band row is stamped with its arrival batch_id, so a
-        # REPLAY of batch N (even long after later batches landed)
-        # sees exactly the store state the original run saw and
-        # rebuilds its pairs partition byte-identically — late
-        # knowledge must flow through downstream retraction channels
-        # (streaming/pipeline.py tombstones), never by rewriting an
-        # old partition. Stores written before stamping existed have
-        # no batch_id column (or null rows once stamped appends mix
-        # in); unstamped rows stay always-visible.
-        if "batch_id" in store.columns:
-            store = store.filter(F.col("batch_id").isNull()
-                                 | (F.col("batch_id") <= int(batch_id)))
-        pairs = (all_bands.alias("n")
-                 .join(store.alias("s"),
-                       (F.col("n.band") == F.col("s.band"))
-                       & (F.col("n.key") == F.col("s.key"))
-                       & (F.col("n.doc_id") != F.col("s.doc_id")))
-                 .select(F.least("n.doc_id", "s.doc_id").alias("doc_a"),
-                         F.greatest("n.doc_id", "s.doc_id").alias("doc_b")))
+    full_store = read_store(spark, bands_dir, BANDS_SCHEMA)
+    # Probe only bands that had ARRIVED as of this batch: each
+    # appended band row is stamped with its arrival batch_id, so a
+    # REPLAY of batch N (even long after later batches landed) sees
+    # exactly the store state the original run saw and rebuilds its
+    # pairs partition byte-identically — late knowledge must flow
+    # through downstream retraction channels (streaming/pipeline.py
+    # tombstones), never by rewriting an old partition. Rows written
+    # before stamping existed read batch_id as null and stay
+    # always-visible. An empty store is an empty local relation, so
+    # the first batch's probe join plans away.
+    store = full_store.filter(F.col("batch_id").isNull()
+                              | (F.col("batch_id") <= int(batch_id)))
+    pairs = (all_bands.alias("n")
+             .join(store.alias("s"),
+                   (F.col("n.band") == F.col("s.band"))
+                   & (F.col("n.key") == F.col("s.key"))
+                   & (F.col("n.doc_id") != F.col("s.doc_id")))
+             .select(F.least("n.doc_id", "s.doc_id").alias("doc_a"),
+                     F.greatest("n.doc_id", "s.doc_id").alias("doc_b")))
     # ...plus new-vs-new inside this batch
     a, b = all_bands.alias("a"), all_bands.alias("b")
     selfp = (a.join(b, (F.col("a.band") == F.col("b.band"))
@@ -88,30 +82,24 @@ def foreach_batch_neardup(batch_df: DataFrame, batch_id: int,
                     & (F.col("a.doc_id") < F.col("b.doc_id")))
              .select(F.col("a.doc_id").alias("doc_a"),
                      F.col("b.doc_id").alias("doc_b")))
-    pairs = selfp if pairs is None else pairs.unionByName(selfp)
     # dynamic overwrite of THIS batch's partition -> replay-idempotent;
     # size-aware fan-out (pair volume is data-dependent — near-zero on
     # clean batches, huge on duplicate-heavy ones).
-    write_batch_partition(pairs.distinct(), batch_id, pairs_dir,
-                          size_aware=True, avg_row_bytes=64)
+    write_batch_partition(pairs.unionByName(selfp).distinct(), batch_id,
+                          pairs_dir, size_aware=True)
     # band append is anti-join-guarded, so a replay (or a crash-retry
     # after a partial append) adds only the missing docs' bands. The
     # guard checks the FULL store (not the arrival-time view): a doc
     # redelivered by an at-least-once source in a later batch keeps
     # its first arrival stamp.
-    full_store = _try_read(spark, bands_dir)
-    to_append = all_bands.withColumn("batch_id", F.lit(int(batch_id)))
-    if full_store is not None:
-        to_append = to_append.join(
-            full_store.select("doc_id").distinct(), "doc_id", "left_anti")
-    to_append.write.mode("append").parquet(bands_dir)
+    (all_bands.withColumn("batch_id", F.lit(int(batch_id)))
+     .join(full_store.select("doc_id").distinct(), "doc_id", "left_anti")
+     .write.mode("append").parquet(bands_dir))
 
 
 def read_pairs(spark, pairs_dir: str, dedup: bool = True) -> DataFrame:
-    """The emitted candidate-pair store. A batch with zero pairs
-    writes no parquet files (only the partition dir markers), so an
-    early read must degrade to an empty typed frame instead of
-    UNABLE_TO_INFER_SCHEMA.
+    """The emitted candidate-pair store, read with its declared
+    schema (empty before any batch has landed a pair).
 
     Within one batch partition a pair appears once; a document
     REDELIVERED by an at-least-once source in a later batch re-emits
@@ -119,15 +107,7 @@ def read_pairs(spark, pairs_dir: str, dedup: bool = True) -> DataFrame:
     full batch is what makes the crash-retry windows lossless), so
     the default read collapses to the distinct pair set. Pass
     ``dedup=False`` for the raw per-batch rows."""
-    df = _try_read(spark, pairs_dir)
-    if df is None:
-        df = spark.createDataFrame(
-            [], "doc_a long, doc_b long, batch_id long")
-    else:
-        # partition-column inference types batch_id as int; pin the
-        # schema so it matches the empty-store fallback regardless of
-        # store state
-        df = df.withColumn("batch_id", F.col("batch_id").cast("long"))
+    df = read_store(spark, pairs_dir, PAIRS_SCHEMA)
     return df.select("doc_a", "doc_b").distinct() if dedup else df
 
 

@@ -34,7 +34,9 @@ from pyspark.sql import functions as F
 from transcript_analysis_spark.plans.sketches import (KM_DIM, KM_SCALE,
                                                       PI_DIR_SCALE, PI_T)
 from transcript_analysis_spark.streaming.store_io import (
-    write_batch_partition)
+    read_store, write_batch_partition)
+
+MOMENT_SCHEMA = "i int, j int, s decimal(38,0), batch_id long"
 
 # store row conventions: (i=-1, j=-1) -> vector count;
 # (i, j=-1) -> colsum_i; (i, j >= i) -> sum(v_i * v_j) upper triangle

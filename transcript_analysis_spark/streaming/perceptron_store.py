@@ -64,7 +64,8 @@ def init_weight_store(spark: SparkSession, root: str) -> int:
 def read_weights(spark: SparkSession, root: str):
     """Latest committed weights row (a pyspark Row; `applied_json`
     maps stream_id -> last applied batch_id)."""
-    return versioned.read_snapshot(spark, root).collect()[0]
+    return versioned.read_snapshot(spark, root,
+                                   schema=_SCHEMA).collect()[0]
 
 
 def _step(feats: DataFrame, w) -> tuple[list[int], int, int]:
@@ -100,7 +101,8 @@ def foreach_batch_perceptron(batch_df: DataFrame, batch_id: int,
             raise FileNotFoundError(
                 f"perceptron store not initialized: {root} "
                 f"(call init_weight_store first)")
-        w = versioned.read_snapshot(spark, root, base).collect()[0]
+        w = versioned.read_snapshot(spark, root, base,
+                                    schema=_SCHEMA).collect()[0]
         applied = json.loads(w["applied_json"] or "{}")
         if int(applied.get(stream_id, -1)) >= batch_id:
             return False                     # replayed batch: no-op

@@ -50,6 +50,17 @@ Per micro-batch of (doc_id, text, lang, source, n_chars) documents:
 Stages 5-9 run on the KEPT subset — curate first, then train/profile/
 index, the order a corpus team actually runs.
 
+Fixed cost per batch: at enginebench scale a batch's time is per-job
+and per-plan overhead, not data, so each stage runs in the fewest
+Spark actions. A size-aware store write is one action: its REBALANCE
+hint lets adaptive execution size the files from the measured shuffle
+bytes (store_io.py), with no checkpoint or count first. Each gate's
+verdicts are computed once: the near-dup-gated frame is pinned, and
+the decontam and DSIR stages pin, write and return their verdicts,
+which the pipeline gates on by semi-join. The returned row counts are
+observed metrics of checkpoints the batch runs anyway, and every
+store is read with its declared schema (no footer-inference job).
+
 Equivalence contract (tests/test_streaming_pipeline.py): after N
 micro-batches `read_kept_final` (kept minus tombstones) EQUALS
 `batch_composite_kept` — the same three gates applied to the union of
@@ -73,7 +84,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from transcript_analysis_spark.streaming.decontam import (
@@ -81,9 +92,9 @@ from transcript_analysis_spark.streaming.decontam import (
 from transcript_analysis_spark.streaming.dsir_store import (
     build_weight_store, foreach_batch_dsir, score_against_store)
 from transcript_analysis_spark.streaming.ivf_store import (
-    build_centroid_store, foreach_batch_ivf)
+    EMBEDDING_SCHEMA, build_centroid_store, foreach_batch_ivf)
 from transcript_analysis_spark.streaming.neardup import (
-    _try_read, foreach_batch_neardup, read_pairs)
+    foreach_batch_neardup, read_pairs)
 from transcript_analysis_spark.streaming.pca_store import foreach_batch_pca
 from transcript_analysis_spark.streaming.sample_store import (
     foreach_batch_sample)
@@ -94,10 +105,12 @@ from transcript_analysis_spark.streaming.islands_store import (
 from transcript_analysis_spark.streaming.sketch_store import (
     foreach_batch_hll, foreach_batch_sketch)
 from transcript_analysis_spark.streaming.store_io import (
-    DEFAULT_ROW_BYTES, observed_row_bytes, partitions_for,
-    write_batch_partition)
+    DEFAULT_ROW_BYTES, observed_row_bytes, partitions_for, read_store,
+    store_has_data, write_batch_partition)
 
 DOC_COLS = ("doc_id", "text", "lang", "source", "n_chars")
+KEPT_SCHEMA = "doc_id long, batch_id long"
+TOMBSTONE_SCHEMA = "doc_id long, batch_id long"
 
 
 @dataclass(frozen=True)
@@ -167,19 +180,31 @@ def gate_dsir(docs: DataFrame, weight_store: DataFrame) -> DataFrame:
     return docs.join(keep, "doc_id", "left_semi")
 
 
+def _pin_counted(df: DataFrame) -> tuple[DataFrame, int]:
+    """Pin `df` (eager localCheckpoint) and return it with its row
+    count. The count comes from an observed metric of the checkpoint's
+    own job, so it costs no extra Spark action."""
+    obs = Observation()
+    pinned = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(
+        eager=True)
+    return pinned, int(obs.get["n"])
+
+
 def foreach_batch_corpus_pipeline(batch_df: DataFrame, batch_id: int,
                                   stores: PipelineStores,
                                   emb_path: str | None = None,
                                   catalog_root: str | None = None) -> dict:
     """One micro-batch through all nine stores (module docstring).
     Every stage writes through its own store's proven foreach/commit
-    function; the gates recompute the same deterministic verdicts
-    inline. Safe to replay with the same batch_id: partition stores
+    function; the decontam and DSIR stages return the verdicts they
+    wrote, and the pipeline gates on those instead of recomputing
+    them. Safe to replay with the same batch_id: partition stores
     overwrite themselves, the band append is anti-join-guarded, the
     perceptron skips via its applied-batch watermark. Returns per-
-    stage row counts (driver-side observability only)."""
+    stage row counts (driver-side observability only), all taken from
+    checkpoints the batch runs anyway."""
     spark = batch_df.sparkSession
-    batch_docs = batch_df.select(*DOC_COLS).localCheckpoint(eager=True)
+    batch_docs, n_in = _pin_counted(batch_df.select(*DOC_COLS))
 
     # 0. flagship islands for the ARRIVING docs (pre-gates — the
     # reference scores and islands every (vid, model) pair before any
@@ -199,7 +224,7 @@ def foreach_batch_corpus_pipeline(batch_df: DataFrame, batch_id: int,
     all_pairs = read_pairs(spark, stores.pairs_dir, dedup=False)
     known_now = (all_pairs.filter(F.col("batch_id") <= int(batch_id))
                  .select("doc_a", "doc_b").distinct())
-    kept = gate_neardup(batch_docs, known_now)
+    kept = gate_neardup(batch_docs, known_now).localCheckpoint(eager=True)
 
     # 1b. retraction tombstones: a doc kept in an EARLIER batch that
     # the now-complete pair store names as a loser (its smaller-id
@@ -208,38 +233,39 @@ def foreach_batch_corpus_pipeline(batch_df: DataFrame, batch_id: int,
     # excludes only OTHER batches' tombstones (so a replay rebuilds
     # its own partition identically), and current-batch kept docs can
     # never qualify (gate_neardup just filtered the same loser set).
-    prior_kept = _try_read(spark, stores.kept_dir)
-    if prior_kept is not None:
+    if store_has_data(spark, stores.kept_dir):
         losers = (all_pairs.select(F.col("doc_b").alias("doc_id"))
                   .distinct())
         elsewhere = (read_tombstones(spark, stores.tombstones_dir)
                      .filter(F.col("batch_id") != int(batch_id))
                      .select("doc_id"))
-        new_tombs = (prior_kept.select("doc_id").distinct()
-                     .join(losers, "doc_id", "left_semi")
+        new_tombs = (losers
+                     .join(read_kept(spark, stores.kept_dir),
+                           "doc_id", "left_semi")
                      .join(elsewhere, "doc_id", "left_anti"))
         write_batch_partition(new_tombs, batch_id,
-                              stores.tombstones_dir, size_aware=True,
-                              avg_row_bytes=48)
+                              stores.tombstones_dir, size_aware=True)
 
-    # 2. decontam: verdicts for the survivors + gate
-    bloom = spark.read.parquet(stores.bloom_dir)
-    foreach_batch_decontam(kept.select("doc_id", "text"), batch_id,
-                           stores.bloom_dir, stores.decontam_dir)
-    kept = gate_decontam(kept, bloom)
+    # 2. decontam: verdicts for the survivors, then gate on them
+    # (gate_decontam's rule: < half the shingles bloom-positive)
+    verdicts = foreach_batch_decontam(kept.select("doc_id", "text"),
+                                      batch_id, stores.bloom_dir,
+                                      stores.decontam_dir)
+    kept = kept.join(
+        verdicts.filter(2 * F.col("n_candidates") < F.col("n_shingles"))
+        .select("doc_id"), "doc_id", "left_semi")
 
-    # 3. DSIR: scores for the survivors + gate
-    weights = spark.read.parquet(stores.dsir_weights_dir)
-    foreach_batch_dsir(kept, batch_id,
-                       stores.dsir_weights_dir, stores.dsir_scores_dir)
-    kept = gate_dsir(kept, weights).localCheckpoint(eager=True)
+    # 3. DSIR: scores for the survivors, then gate on them
+    # (gate_dsir's rule: keep target-like docs)
+    scores = foreach_batch_dsir(kept, batch_id, stores.dsir_weights_dir,
+                                stores.dsir_scores_dir)
+    kept, n_kept = _pin_counted(kept.join(
+        scores.filter(F.col("target_like")).select("doc_id"), "doc_id",
+        "left_semi"))
 
     # 4. the kept-set — the pipeline's product
-    # kept is already checkpointed above, so the size-aware count is
-    # a cheap pass over pinned partitions.
     write_batch_partition(kept.select("doc_id"), batch_id,
-                          stores.kept_dir, size_aware=True,
-                          avg_row_bytes=48)
+                          stores.kept_dir, size_aware=True)
 
     # 9. holdout sample delta over the same kept docs (bottom-k;
     # ordered here with the other kept-subset stores — it needs only
@@ -256,14 +282,14 @@ def foreach_batch_corpus_pipeline(batch_df: DataFrame, batch_id: int,
     foreach_batch_hll(kept, batch_id, stores.hll_dir,
                       group_col="source", id_col="doc_id")
 
-    # 7. IVF assignment for kept docs that carry vectors
+    # 7. IVF assignment for kept docs that carry vectors, pinned once
+    # for both the IVF and the PCA store
     n_vec = 0
     if emb_path is not None:
-        emb = spark.read.parquet(emb_path)
-        batch_emb = emb.join(
+        emb = spark.read.schema(EMBEDDING_SCHEMA).parquet(emb_path)
+        batch_emb, n_vec = _pin_counted(emb.join(
             kept.select(F.col("doc_id").alias("vec_id")), "vec_id",
-            "left_semi")
-        n_vec = batch_emb.count()
+            "left_semi"))
         if n_vec:
             foreach_batch_ivf(batch_emb, batch_id,
                               stores.centroid_dir, stores.assign_dir)
@@ -273,9 +299,8 @@ def foreach_batch_corpus_pipeline(batch_df: DataFrame, batch_id: int,
     if catalog_root is not None:
         publish_snapshot(spark, stores, catalog_root, batch_id)
 
-    return {"batch_id": batch_id, "in": batch_docs.count(),
-            "kept": kept.count(), "perceptron_applied": applied,
-            "vectors_assigned": n_vec}
+    return {"batch_id": batch_id, "in": n_in, "kept": n_kept,
+            "perceptron_applied": applied, "vectors_assigned": n_vec}
 
 
 # --- consistent cross-store snapshots (sources/catalog.py) ----------------
@@ -377,7 +402,7 @@ def compact_pipeline_stores(spark: SparkSession, stores: PipelineStores,
     # one-stamp collapse below would resurface superseded islands
     # beside their replacements; they get the upsert-correct
     # compaction instead (drop superseded generations, stamps intact).
-    if through >= 0 and _try_read(spark, stores.islands_dir) is not None:
+    if through >= 0 and store_has_data(spark, stores.islands_dir):
         out.update(compact_islands_store(spark, stores.islands_dir,
                                          through))
     batch_stores = (stores.pairs_dir, stores.decontam_dir,
@@ -386,15 +411,15 @@ def compact_pipeline_stores(spark: SparkSession, stores: PipelineStores,
                     stores.pca_dir, stores.sample_dir,
                     stores.tombstones_dir)
     for d in batch_stores:
-        df = _try_read(spark, d)
-        if df is None or through < 0:
+        if through < 0 or not store_has_data(spark, d):
             continue
+        df = spark.read.parquet(d)
         old = df.filter(F.col("batch_id") <= through)
         n = old.count()
         if n == 0:
             continue
-        # row width from the store's OWN footers (r10 calibration),
-        # falling back to the shared default for unreadable layouts
+        # row width from the store's OWN footers, falling back to
+        # the shared default for unreadable layouts
         collapsed = (old.drop("batch_id")
                      .withColumn("batch_id", F.lit(int(through)))
                      .coalesce(coalesce
@@ -427,19 +452,14 @@ def read_kept(spark: SparkSession, kept_dir: str) -> DataFrame:
     """The raw arrival-time kept-set across all batches
     (doc_id, batch_id) — before retractions. The finalized product is
     `read_kept_final`."""
-    return spark.read.parquet(kept_dir)
+    return read_store(spark, kept_dir, KEPT_SCHEMA)
 
 
 def read_tombstones(spark: SparkSession, tombstones_dir: str) -> DataFrame:
-    """Retraction rows (doc_id, batch_id of the discovering batch).
-    Degrades to an empty typed frame before the store exists (or when
-    every partition is an empty marker, as in a fully id-ordered
-    run)."""
-    df = _try_read(spark, tombstones_dir)
-    if df is None:
-        return spark.createDataFrame([], "doc_id long, batch_id long")
-    return df.select("doc_id",
-                     F.col("batch_id").cast("long").alias("batch_id"))
+    """Retraction rows (doc_id, batch_id of the discovering batch);
+    empty before any batch has retracted a doc (a fully id-ordered
+    run never does)."""
+    return read_store(spark, tombstones_dir, TOMBSTONE_SCHEMA)
 
 
 def read_kept_final(spark: SparkSession, kept_dir: str,

@@ -37,9 +37,11 @@ from pyspark.sql import functions as F
 from transcript_analysis_spark.plans.data_pipeline import spark_char_hash
 from transcript_analysis_spark.plans.scale_ops import SAMPLE_K
 from transcript_analysis_spark.streaming.store_io import (
-    write_batch_partition)
+    read_store, write_batch_partition)
 
 SAMPLE_COLS = ("doc_id", "lang", "n_chars", "hv")
+SAMPLE_SCHEMA = ("doc_id long, lang string, n_chars long, hv long, "
+                 "batch_id long")
 
 
 def batch_sample(docs: DataFrame, k: int = SAMPLE_K) -> DataFrame:
@@ -66,7 +68,7 @@ def read_sample(spark: SparkSession, sample_dir: str,
                 k: int = SAMPLE_K) -> DataFrame:
     """The current holdout sample: bottom-k over all landed deltas.
     O(#batches x k) rows in, k out."""
-    return (spark.read.parquet(sample_dir)
+    return (read_store(spark, sample_dir, SAMPLE_SCHEMA)
             .select(*SAMPLE_COLS)
             .orderBy("hv", "doc_id").limit(k))
 

@@ -30,7 +30,9 @@ from transcript_analysis_spark.plans.sketches import (cms_cells,
                                                       cms_estimate,
                                                       tokens_with_hash)
 from transcript_analysis_spark.streaming.store_io import (
-    write_batch_partition)
+    read_store, write_batch_partition)
+
+CMS_SCHEMA = "j int, bucket long, cnt long, batch_id long"
 
 
 def foreach_batch_sketch(batch_df: DataFrame, batch_id: int,
@@ -47,7 +49,7 @@ def read_sketch(spark: SparkSession, cms_dir: str) -> DataFrame:
     """The current sketch: cell-wise sum over all batch deltas.
     O(#batches x 16k) rows in, <= 16k out; compact with
     sources/sinks.py:compact_parquet when the batch count grows."""
-    return (spark.read.parquet(cms_dir)
+    return (read_store(spark, cms_dir, CMS_SCHEMA)
             .groupBy("j", "bucket")
             .agg(F.sum("cnt").cast("long").alias("cnt")))
 

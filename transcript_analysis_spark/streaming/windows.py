@@ -427,17 +427,13 @@ def foreach_batch_enrich(batch_df: DataFrame, batch_id: int,
     spark = batch_df.sparkSession
     dim = spark.read.parquet(dim_dir)
     from transcript_analysis_spark.streaming.store_io import (
-        DEFAULT_ROW_BYTES, write_batch_partition)
-    # Enriched rows carry the full event PLUS the joined dim columns,
-    # so the default width estimate undershoots and batch-0 files land
-    # above the 128 MB target (r9 advice item). Size the cold estimate
-    # from the schema (~32 B per joined dim column on top of the event
-    # default); batches 1+ self-correct from the footer calibration.
+        write_batch_partition)
+    # Enriched rows carry the full event PLUS the joined dim columns;
+    # the size-aware write measures that width from the shuffle bytes
+    # instead of estimating it.
     write_batch_partition(
         batch_df.join(F.broadcast(dim), dim_key, "left"),
-        batch_id, out_dir, size_aware=True,
-        avg_row_bytes=DEFAULT_ROW_BYTES + 32 * max(
-            0, len(dim.columns) - 1))
+        batch_id, out_dir, size_aware=True)
 
 
 def run_enriched_stream(stream_df: DataFrame, dim_dir: str,
