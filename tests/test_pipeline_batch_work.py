@@ -40,17 +40,19 @@ def warm_batch(spark, tmp_path_factory):
     pl.foreach_batch_corpus_pipeline(docs.filter(doc_id < 100), 1,
                                      stores, emb_path)
     sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped_before = set(tracker.getJobIdsForGroup(None))
     sc.setJobGroup("warm-pipeline-batch", "one warm pipeline batch")
     try:
         report = pl.foreach_batch_corpus_pipeline(
             docs.filter((doc_id >= 100) & (doc_id < 200)), 2, stores,
             emb_path)
-        jobs = list(sc.statusTracker().getJobIdsForGroup(
-            "warm-pipeline-batch"))
+        jobs = list(tracker.getJobIdsForGroup("warm-pipeline-batch"))
+        ungrouped = set(tracker.getJobIdsForGroup(None)) - ungrouped_before
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     return {"stores": stores, "report": report, "jobs": jobs,
-            "emb_path": emb_path}
+            "ungrouped": ungrouped, "emb_path": emb_path}
 
 
 def test_warm_batch_job_count_is_pinned(warm_batch):
@@ -59,6 +61,27 @@ def test_warm_batch_job_count_is_pinned(warm_batch):
     assert len(warm_batch["jobs"]) <= WARM_BATCH_JOB_CEILING, (
         f"one warm pipeline batch ran {len(warm_batch['jobs'])} Spark "
         f"jobs, ceiling {WARM_BATCH_JOB_CEILING}")
+
+
+def test_no_stage_loses_the_callers_job_group(warm_batch):
+    """The batch runs most stages on a thread pool; each must run in
+    the caller's job group, or the ceiling above would miss jobs that
+    escaped it."""
+    assert not warm_batch["ungrouped"], (
+        f"jobs {sorted(warm_batch['ungrouped'])} ran outside the "
+        f"caller's job group")
+
+
+def test_every_perceptron_version_is_one_file(warm_batch):
+    """The one-row weights frame commits as one parquet file per
+    version, not an empty file beside the row."""
+    root = warm_batch["stores"].perceptron_root
+    versions = sorted(n for n in os.listdir(root) if n.startswith("v_"))
+    assert len(versions) == 4          # init + three batches
+    for v in versions:
+        files = [n for n in os.listdir(os.path.join(root, v))
+                 if n.endswith(".parquet")]
+        assert len(files) == 1, (v, files)
 
 
 def test_observed_counts_match_the_stores(spark, warm_batch):

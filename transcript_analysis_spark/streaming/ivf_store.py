@@ -38,7 +38,8 @@ from transcript_analysis_spark.plans.data_pipeline import (
     ivf_seed_centroids,
     ivf_vectors,
 )
-from transcript_analysis_spark.streaming.store_io import read_store
+from transcript_analysis_spark.streaming.store_io import (
+    read_store, write_batch_partition)
 
 # The corpus embeddings table the store assigns, and the store's own
 # two tables.
@@ -67,14 +68,9 @@ def foreach_batch_ivf(batch_df: DataFrame, batch_id: int,
                       centroid_dir: str, assign_dir: str) -> None:
     """Assign one micro-batch of (vec_id, label, embedding) rows and
     land them in a batch_id partition (replay-idempotent overwrite)."""
-    spark = batch_df.sparkSession
-    cents = read_store(spark, centroid_dir, CENTROID_SCHEMA)
-    out = (assign_against_store(batch_df, cents)
-           .withColumn("batch_id", F.lit(batch_id)))
-    (out.write.mode("overwrite")
-        .partitionBy("batch_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(assign_dir))
+    cents = read_store(batch_df.sparkSession, centroid_dir, CENTROID_SCHEMA)
+    write_batch_partition(assign_against_store(batch_df, cents), batch_id,
+                          assign_dir)
 
 
 def read_assignments(spark: SparkSession, assign_dir: str) -> DataFrame:

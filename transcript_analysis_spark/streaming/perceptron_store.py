@@ -57,8 +57,15 @@ _SCHEMA = ("w0 long, w1 long, w2 long, w3 long, n_seen long, "
 
 def init_weight_store(spark: SparkSession, root: str) -> int:
     """Commit version 1: zero weights, no batches applied."""
-    row = spark.createDataFrame([(0, 0, 0, 0, 0, "{}")], _SCHEMA)
+    row = _weights_row(spark, (0, 0, 0, 0, 0, "{}"))
     return versioned.commit_version(row, root, base_version=None)
+
+
+def _weights_row(spark: SparkSession, row: tuple) -> DataFrame:
+    """One weights row as a one-partition frame. `createDataFrame`
+    spreads a local list over the default parallelism, and the commit
+    would then land an empty parquet file beside the row."""
+    return spark.createDataFrame([row], _SCHEMA).coalesce(1)
 
 
 def read_weights(spark: SparkSession, root: str):
@@ -108,10 +115,10 @@ def foreach_batch_perceptron(batch_df: DataFrame, batch_id: int,
             return False                     # replayed batch: no-op
         upd, _err, n = _step(feats, w)
         applied[stream_id] = batch_id
-        new_row = spark.createDataFrame(
-            [tuple(int(w[f"w{k}"]) + upd[k] for k in range(N_FEATURES))
-             + (int(w["n_seen"]) + n, json.dumps(applied, sort_keys=True))],
-            _SCHEMA)
+        new_row = _weights_row(
+            spark,
+            tuple(int(w[f"w{k}"]) + upd[k] for k in range(N_FEATURES))
+            + (int(w["n_seen"]) + n, json.dumps(applied, sort_keys=True)))
         try:
             versioned.commit_version(new_row, root, base_version=base)
             return True

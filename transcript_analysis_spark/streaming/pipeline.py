@@ -52,14 +52,32 @@ index, the order a corpus team actually runs.
 
 Fixed cost per batch: at enginebench scale a batch's time is per-job
 and per-plan overhead, not data, so each stage runs in the fewest
-Spark actions. A size-aware store write is one action: its REBALANCE
-hint lets adaptive execution size the files from the measured shuffle
-bytes (store_io.py), with no checkpoint or count first. Each gate's
-verdicts are computed once: the near-dup-gated frame is pinned, and
-the decontam and DSIR stages pin, write and return their verdicts,
-which the pipeline gates on by semi-join. The returned row counts are
-observed metrics of checkpoints the batch runs anyway, and every
-store is read with its declared schema (no footer-inference job).
+Spark actions, and the stages run as a fixed dependency graph, so a
+batch costs its critical path rather than the sum of its stages. The
+gate chain — near-dup pairs write, pairs read, near-dup gate pin,
+decontam, DSIR, kept pin — runs in order on the calling thread. Every
+other stage runs on a thread pool and starts as soon as its input is
+pinned: islands from the pinned batch, the tombstone write from the
+pairs read, and the kept write, sample, perceptron, CMS, HLL and the
+vector pin (then IVF and PCA) from the kept pin. Two ordering rules go
+beyond data flow. The tombstone write finishes before the kept write
+starts, because it reads the kept store and a replay's dynamic
+overwrite would delete that partition under the reader. And
+`publish_snapshot` runs only after every stage has landed. If any
+stage raises, the batch waits for every started stage to finish, then
+re-raises the first error: no write is still running when it returns
+and nothing is published, so the redelivered batch replays cleanly.
+Pool calls run in the caller's job group and local properties
+(`pyspark.util.inheritable_thread_target`).
+
+Within a stage: a size-aware store write is one action, its REBALANCE
+hint letting adaptive execution size the files from the measured
+shuffle bytes (store_io.py). Each gate's verdicts are computed once:
+the near-dup-gated frame is pinned, and the decontam and DSIR stages
+pin, write and return their verdicts, which the pipeline gates on by
+semi-join. The returned row counts are observed metrics of
+checkpoints the batch runs anyway, and every store is read with its
+declared schema (no footer-inference job).
 
 Equivalence contract (tests/test_streaming_pipeline.py): after N
 micro-batches `read_kept_final` (kept minus tombstones) EQUALS
@@ -82,10 +100,12 @@ already demonstrates.
 
 from __future__ import annotations
 
+from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from transcript_analysis_spark.streaming.decontam import (
     build_bloom_store, foreach_batch_decontam, probe_bloom)
@@ -194,113 +214,184 @@ def foreach_batch_corpus_pipeline(batch_df: DataFrame, batch_id: int,
                                   stores: PipelineStores,
                                   emb_path: str | None = None,
                                   catalog_root: str | None = None) -> dict:
-    """One micro-batch through all nine stores (module docstring).
-    Every stage writes through its own store's proven foreach/commit
-    function; the decontam and DSIR stages return the verdicts they
-    wrote, and the pipeline gates on those instead of recomputing
-    them. Safe to replay with the same batch_id: partition stores
-    overwrite themselves, the band append is anti-join-guarded, the
-    perceptron skips via its applied-batch watermark. Returns per-
+    """One micro-batch through all nine stores (module docstring), as
+    a fixed dependency graph: the gate chain runs on the calling
+    thread, every other stage on `_Stages`' pool as soon as its input
+    is pinned. Every stage writes through its own store's proven
+    foreach/commit function; the decontam and DSIR stages return the
+    verdicts they wrote, and the pipeline gates on those instead of
+    recomputing them. Safe to replay with the same batch_id: partition
+    stores overwrite themselves, the band append is anti-join-guarded,
+    the perceptron skips via its applied-batch watermark. Returns per-
     stage row counts (driver-side observability only), all taken from
     checkpoints the batch runs anyway."""
     spark = batch_df.sparkSession
     batch_docs, n_in = _pin_counted(batch_df.select(*DOC_COLS))
 
-    # 0. flagship islands for the ARRIVING docs (pre-gates — the
-    # reference scores and islands every (vid, model) pair before any
-    # curation, island_worker.py:150-184). Pure per-doc math ⇒ the
-    # union across batches equals islands_flagship over the corpus.
-    foreach_batch_islands(batch_docs.select("doc_id", "text"), batch_id,
-                          stores.islands_dir)
+    with _Stages(spark) as stages:
+        # 0. flagship islands for the ARRIVING docs (pre-gates — the
+        # reference scores and islands every (vid, model) pair before
+        # any curation, island_worker.py:150-184). Pure per-doc math ⇒
+        # the union across batches equals islands_flagship over the
+        # corpus. Needs nothing but the pinned batch.
+        stages.start(foreach_batch_islands,
+                     batch_docs.select("doc_id", "text"), batch_id,
+                     stores.islands_dir)
 
-    # 1. near-dup: grow the band store, land this batch's pairs
-    foreach_batch_neardup(batch_docs.select("doc_id", "text"), batch_id,
-                          stores.bands_dir, stores.pairs_dir)
-    # The arrival-time gate sees only pairs known AS OF this batch
-    # (partitions <= batch_id): a replayed batch then rebuilds its
-    # kept partition byte-identically even after later batches have
-    # landed more pairs — late knowledge reaches the product only
-    # through the tombstone channel, never by rewriting history.
-    all_pairs = read_pairs(spark, stores.pairs_dir, dedup=False)
-    known_now = (all_pairs.filter(F.col("batch_id") <= int(batch_id))
-                 .select("doc_a", "doc_b").distinct())
-    kept = gate_neardup(batch_docs, known_now).localCheckpoint(eager=True)
+        # 1. near-dup: grow the band store, land this batch's pairs
+        foreach_batch_neardup(batch_docs.select("doc_id", "text"),
+                              batch_id, stores.bands_dir, stores.pairs_dir)
+        # The arrival-time gate sees only pairs known AS OF this batch
+        # (partitions <= batch_id): a replayed batch then rebuilds its
+        # kept partition byte-identically even after later batches
+        # have landed more pairs — late knowledge reaches the product
+        # only through the tombstone channel, never by rewriting
+        # history.
+        all_pairs = read_pairs(spark, stores.pairs_dir, dedup=False)
+        tombstones = stages.start(_land_tombstones, all_pairs, batch_id,
+                                  stores)
+        known_now = (all_pairs.filter(F.col("batch_id") <= int(batch_id))
+                     .select("doc_a", "doc_b").distinct())
+        kept = gate_neardup(batch_docs, known_now).localCheckpoint(
+            eager=True)
 
-    # 1b. retraction tombstones: a doc kept in an EARLIER batch that
-    # the now-complete pair store names as a loser (its smaller-id
-    # partner arrived after it did) is retracted. Idempotent: the
-    # verdicts are deterministic from the pair store, the anti-join
-    # excludes only OTHER batches' tombstones (so a replay rebuilds
-    # its own partition identically), and current-batch kept docs can
-    # never qualify (gate_neardup just filtered the same loser set).
-    if store_has_data(spark, stores.kept_dir):
-        losers = (all_pairs.select(F.col("doc_b").alias("doc_id"))
-                  .distinct())
-        elsewhere = (read_tombstones(spark, stores.tombstones_dir)
-                     .filter(F.col("batch_id") != int(batch_id))
-                     .select("doc_id"))
-        new_tombs = (losers
-                     .join(read_kept(spark, stores.kept_dir),
-                           "doc_id", "left_semi")
-                     .join(elsewhere, "doc_id", "left_anti"))
-        write_batch_partition(new_tombs, batch_id,
-                              stores.tombstones_dir, size_aware=True)
+        # 2. decontam: verdicts for the survivors, then gate on them
+        # (gate_decontam's rule: < half the shingles bloom-positive)
+        verdicts = foreach_batch_decontam(kept.select("doc_id", "text"),
+                                          batch_id, stores.bloom_dir,
+                                          stores.decontam_dir)
+        kept = kept.join(
+            verdicts.filter(2 * F.col("n_candidates") < F.col("n_shingles"))
+            .select("doc_id"), "doc_id", "left_semi")
 
-    # 2. decontam: verdicts for the survivors, then gate on them
-    # (gate_decontam's rule: < half the shingles bloom-positive)
-    verdicts = foreach_batch_decontam(kept.select("doc_id", "text"),
-                                      batch_id, stores.bloom_dir,
-                                      stores.decontam_dir)
-    kept = kept.join(
-        verdicts.filter(2 * F.col("n_candidates") < F.col("n_shingles"))
-        .select("doc_id"), "doc_id", "left_semi")
-
-    # 3. DSIR: scores for the survivors, then gate on them
-    # (gate_dsir's rule: keep target-like docs)
-    scores = foreach_batch_dsir(kept, batch_id, stores.dsir_weights_dir,
-                                stores.dsir_scores_dir)
-    kept, n_kept = _pin_counted(kept.join(
-        scores.filter(F.col("target_like")).select("doc_id"), "doc_id",
-        "left_semi"))
-
-    # 4. the kept-set — the pipeline's product
-    write_batch_partition(kept.select("doc_id"), batch_id,
-                          stores.kept_dir, size_aware=True)
-
-    # 9. holdout sample delta over the same kept docs (bottom-k;
-    # ordered here with the other kept-subset stores — it needs only
-    # the kept frame, not the vector join below)
-    foreach_batch_sample(kept, batch_id, stores.sample_dir)
-
-    # 5. perceptron online update on the kept docs (exactly-once)
-    applied = foreach_batch_perceptron(kept, batch_id,
-                                       stores.perceptron_root,
-                                       stream_id="corpus_pipeline")
-
-    # 6. sketch profile of the kept docs
-    foreach_batch_sketch(kept, batch_id, stores.cms_dir)
-    foreach_batch_hll(kept, batch_id, stores.hll_dir,
-                      group_col="source", id_col="doc_id")
-
-    # 7. IVF assignment for kept docs that carry vectors, pinned once
-    # for both the IVF and the PCA store
-    n_vec = 0
-    if emb_path is not None:
-        emb = spark.read.schema(EMBEDDING_SCHEMA).parquet(emb_path)
-        batch_emb, n_vec = _pin_counted(emb.join(
-            kept.select(F.col("doc_id").alias("vec_id")), "vec_id",
+        # 3. DSIR: scores for the survivors, then gate on them
+        # (gate_dsir's rule: keep target-like docs)
+        scores = foreach_batch_dsir(kept, batch_id,
+                                    stores.dsir_weights_dir,
+                                    stores.dsir_scores_dir)
+        kept, n_kept = _pin_counted(kept.join(
+            scores.filter(F.col("target_like")).select("doc_id"), "doc_id",
             "left_semi"))
-        if n_vec:
-            foreach_batch_ivf(batch_emb, batch_id,
-                              stores.centroid_dir, stores.assign_dir)
-            # 8. PCA moment deltas for the same kept vectors
-            foreach_batch_pca(batch_emb, batch_id, stores.pca_dir)
+
+        # 4. the kept-set — the pipeline's product. Only after the
+        # tombstone stage, which reads this store: on a replay the
+        # dynamic overwrite deletes this batch's partition under it.
+        stages.start(write_batch_partition, kept.select("doc_id"),
+                     batch_id, stores.kept_dir, size_aware=True,
+                     after=(tombstones,))
+
+        # 9. holdout sample delta (bottom-k), 5. perceptron online
+        # update (exactly-once), 6. CMS + HLL profile: each needs only
+        # the pinned kept frame
+        stages.start(foreach_batch_sample, kept, batch_id,
+                     stores.sample_dir)
+        applied = stages.start(foreach_batch_perceptron, kept, batch_id,
+                               stores.perceptron_root,
+                               stream_id="corpus_pipeline")
+        stages.start(foreach_batch_sketch, kept, batch_id, stores.cms_dir)
+        stages.start(foreach_batch_hll, kept, batch_id, stores.hll_dir,
+                     group_col="source", id_col="doc_id")
+
+        # 7. IVF assignment and 8. PCA moment deltas for the kept docs
+        # that carry vectors, pinned once for both stores
+        vectors = None
+        if emb_path is not None:
+            vectors = stages.start(_pin_vectors, spark, emb_path, kept)
+            stages.start(_land_vectors, vectors, foreach_batch_ivf,
+                         batch_id, stores.centroid_dir, stores.assign_dir)
+            stages.start(_land_vectors, vectors, foreach_batch_pca,
+                         batch_id, stores.pca_dir)
 
     if catalog_root is not None:
         publish_snapshot(spark, stores, catalog_root, batch_id)
 
     return {"batch_id": batch_id, "in": n_in, "kept": n_kept,
-            "perceptron_applied": applied, "vectors_assigned": n_vec}
+            "perceptron_applied": applied.result(),
+            "vectors_assigned": vectors.result()[1] if vectors else 0}
+
+
+# One thread per stage a batch starts off the calling thread (islands,
+# tombstones, kept write, sample, perceptron, CMS, HLL, vector pin, IVF,
+# PCA): a stage waiting for its input blocks only its own thread, and
+# no stage queues behind another.
+_POOL_STAGES = 10
+
+
+class _Stages:
+    """The stages one batch runs beside its gate chain. `start` runs
+    ``fn(*args, **kwargs)`` on the pool after every future in `after`
+    has returned, in the caller's Spark thread context: job group,
+    local properties and session tags. Leaving the block waits for
+    every started stage, then re-raises the first error in start
+    order, so no write is still running when the batch returns."""
+
+    def __init__(self, spark: SparkSession):
+        self._spark = spark
+        self._pool = ThreadPoolExecutor(_POOL_STAGES,
+                                        thread_name_prefix="pipeline-stage")
+        self._started: list[Future] = []
+
+    def __enter__(self) -> "_Stages":
+        return self
+
+    def start(self, fn, *args, after: tuple[Future, ...] = (),
+              **kwargs) -> Future:
+        def stage():
+            for dep in after:
+                dep.result()
+            return fn(*args, **kwargs)
+        # Each wrap clones the caller's local properties, so no two
+        # stages share (and clobber) one property set.
+        fut = self._pool.submit(inheritable_thread_target(self._spark)(stage))
+        self._started.append(fut)
+        return fut
+
+    def __exit__(self, exc_type, exc, tb) -> None:
+        self._pool.shutdown(wait=True, cancel_futures=exc_type is not None)
+        for fut in self._started:
+            if not fut.cancelled() and fut.exception() is not None:
+                raise fut.exception()
+
+
+def _land_tombstones(all_pairs: DataFrame, batch_id: int,
+                     stores: PipelineStores) -> None:
+    """1b. retraction tombstones: a doc kept in an EARLIER batch that
+    the now-complete pair store names as a loser (its smaller-id
+    partner arrived after it did) is retracted. Idempotent: the
+    verdicts are deterministic from the pair store, the anti-join
+    excludes only OTHER batches' tombstones (so a replay rebuilds its
+    own partition identically), and current-batch kept docs can never
+    qualify (gate_neardup filters the same loser set)."""
+    spark = all_pairs.sparkSession
+    if not store_has_data(spark, stores.kept_dir):
+        return
+    losers = all_pairs.select(F.col("doc_b").alias("doc_id")).distinct()
+    elsewhere = (read_tombstones(spark, stores.tombstones_dir)
+                 .filter(F.col("batch_id") != int(batch_id))
+                 .select("doc_id"))
+    new_tombs = (losers
+                 .join(read_kept(spark, stores.kept_dir), "doc_id",
+                       "left_semi")
+                 .join(elsewhere, "doc_id", "left_anti"))
+    write_batch_partition(new_tombs, batch_id, stores.tombstones_dir,
+                          size_aware=True)
+
+
+def _pin_vectors(spark: SparkSession, emb_path: str,
+                 kept: DataFrame) -> tuple[DataFrame, int]:
+    """The kept docs' embedding rows, pinned and counted."""
+    emb = spark.read.schema(EMBEDDING_SCHEMA).parquet(emb_path)
+    return _pin_counted(emb.join(
+        kept.select(F.col("doc_id").alias("vec_id")), "vec_id",
+        "left_semi"))
+
+
+def _land_vectors(vectors: Future, land, batch_id: int, *dirs: str) -> None:
+    """Run a vector store's foreach function on the pinned vectors,
+    once `_pin_vectors` has returned, when there are any."""
+    batch_emb, n_vec = vectors.result()
+    if n_vec:
+        land(batch_emb, batch_id, *dirs)
 
 
 # --- consistent cross-store snapshots (sources/catalog.py) ----------------
